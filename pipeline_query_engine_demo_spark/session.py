@@ -11,8 +11,10 @@ for the 100 TB design point:
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing);
 - broadcast threshold generous enough that dimension tables never shuffle;
 - Arrow on for the few Pandas-UDF operators;
-- shuffle partitions sized by env so local[32] tests and a 1000-executor
-  cluster use the same code path with different settings.
+- shuffle (and streaming state) partitions sized from the session's
+  cores, like the reference sizes its pipelines to the machine's
+  threads, so a 4-core box and local[32] run the same code path with
+  one task per core and a cluster sets the count by shuffled bytes.
 """
 
 from __future__ import annotations
@@ -33,6 +35,8 @@ from pyspark.sql import SparkSession
 _VENDOR_DIR = os.path.abspath(
     os.path.join(os.path.dirname(__file__), "..", "vendor")
 )
+#: Directory holding the ``pipeline_query_engine_demo_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _ensure_protobuf() -> None:
@@ -57,38 +61,66 @@ def _ensure_protobuf() -> None:
 _ensure_protobuf()
 
 
-def ensure_protobuf_on_workers(spark: SparkSession) -> None:
-    """Extend the captured-at-UDF-creation worker env with the vendor dir.
+def _add_worker_pythonpath(spark: SparkSession, path: str) -> None:
+    """Append ``path`` to the PYTHONPATH that Spark hands its Python
+    workers, unless it is already there.
 
-    The transformWithState state-server workers are spawned with the
-    PythonFunction's ``envVars`` (``sc.environment``), NOT the driver's
-    live ``os.environ`` — so when the JVM was launched before this
-    package was imported (the driver-contract path: vanilla
-    SparkSession, then ``import __spark_entry__``), the os.environ edit
-    in :func:`_ensure_protobuf` never reaches them. Mutating
-    ``sc.environment`` here does, because it is read at UDF creation
-    time. No-op when a real google.protobuf is installed."""
-    if _VENDOR_DIR not in sys.path:  # real protobuf won; nothing vendored
-        return
+    Workers are spawned with the PythonFunction's ``envVars``
+    (``sc.environment``, read at UDF / data-source creation time), NOT
+    the live ``os.environ`` — so when the JVM was launched before this
+    package was imported (a vanilla SparkSession, then
+    ``import __spark_entry__``), an ``os.environ`` edit never reaches
+    them, while this one does."""
     env = spark.sparkContext.environment
     existing = env.get("PYTHONPATH", "")
-    if _VENDOR_DIR not in existing.split(os.pathsep):
-        env["PYTHONPATH"] = (
-            existing + os.pathsep + _VENDOR_DIR if existing else _VENDOR_DIR
-        )
-    env.setdefault("PROTOCOL_BUFFERS_PYTHON_IMPLEMENTATION", "python")
+    if path not in existing.split(os.pathsep):
+        env["PYTHONPATH"] = existing + os.pathsep + path if existing else path
 
 
-# Defaults chosen for the local[32] / 128 GiB harness; on a real cluster
-# these are overridden by spark-submit conf (the code never assumes them).
+def ensure_package_on_workers(spark: SparkSession) -> None:
+    """Let Python workers import this package from any working directory.
+
+    Workers unpickle Python data sources by reference, so they must
+    import ``pipeline_query_engine_demo_spark``; without this they find
+    it only when the JVM's cwd is the repo root."""
+    _add_worker_pythonpath(spark, _PACKAGE_ROOT)
+
+
+def ensure_protobuf_on_workers(spark: SparkSession) -> None:
+    """Put the vendored protobuf runtime on the transformWithState
+    state-server workers' PYTHONPATH (see :func:`_add_worker_pythonpath`
+    for why ``os.environ`` is not enough). No-op when a real
+    google.protobuf is installed."""
+    if _VENDOR_DIR not in sys.path:  # real protobuf won; nothing vendored
+        return
+    _add_worker_pythonpath(spark, _VENDOR_DIR)
+    spark.sparkContext.environment.setdefault(
+        "PROTOCOL_BUFFERS_PYTHON_IMPLEMENTATION", "python"
+    )
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """min(16g, half of physical memory): the heap a local driver may
+    claim without outgrowing the box. 16g when ``meminfo`` is unreadable
+    (non-Linux hosts)."""
+    cap_mib = 16 * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mib, int(line.split()[1]) // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{cap_mib}m"
+
+
+# Defaults for a local[n] harness; on a real cluster these are
+# overridden by spark-submit conf (the code never assumes them).
 _LOCAL_DEFAULTS: dict[str, str] = {
     # --- adaptive execution: the scale workhorse ------------------------
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # --- shuffle sizing -------------------------------------------------
-    # At 100 TB this would be O(10k); AQE coalesces down, so err high.
-    "spark.sql.shuffle.partitions": "32",
     # --- join strategy --------------------------------------------------
     # region/nation/supplier/part are all broadcast-able at any SF that
     # fits the TPC-H-ish ratios; 64 MiB covers them with margin.
@@ -103,11 +135,6 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # events.ts is ns-precision Parquet; read as BIGINT nanos and convert
     # in sources.catalog.load_table (truncate to µs, matching DuckDB).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Honored when THIS factory launches the JVM (local mode, fresh
-    # process); a no-op on an already-running session. The 1g default
-    # OOMs broadcast builds well before the 64 MiB threshold is reached
-    # (observed at 10x sf0.1: notEnoughMemoryToBuildAndBroadcastTable).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
 }
 
 
@@ -146,10 +173,29 @@ def get_spark(app_name: str = "pipeline-query-engine-spark", **overrides: str) -
     Core count comes from ``SPARK_GRAFT_CPUS`` (driver contract) so the
     bench harness and tests share one factory. ``overrides`` win over
     the defaults — callers opt out, never fork the config dict.
+
+    Shuffle partitions default to the core count (``defaultParallelism``
+    of ``local[n]``), one path for batch and streaming. AQE coalesces
+    batch shuffles anyway, but it is off inside streaming micro-batches,
+    where every shuffle partition is a state store, so partitions beyond
+    the core count only add per-store commit cost. A drain that resumes
+    a checkpoint keeps the count recorded in it. At 100 TB a cluster
+    sets the count by shuffled bytes (SCALE.md).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cores = str(os.cpu_count()) if cpus == "*" else cpus
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    conf = {**_LOCAL_DEFAULTS, **overrides}
+    conf = {
+        **_LOCAL_DEFAULTS,
+        "spark.sql.shuffle.partitions": cores,
+        # Honored when THIS factory launches the JVM (local mode, fresh
+        # process); a no-op on an already-running session. The 1g default
+        # OOMs broadcast builds well before the 64 MiB threshold is reached
+        # (observed at 10x sf0.1: notEnoughMemoryToBuildAndBroadcastTable).
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _default_driver_memory(),
+        **overrides,
+    }
     for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

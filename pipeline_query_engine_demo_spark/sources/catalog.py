@@ -100,11 +100,14 @@ def _scan_units(path: str) -> int:
         if pq is None:
             n = 1 << 30
         else:
+            from pyarrow.lib import ArrowException
+
             try:
                 n = max(1, pq.ParquetFile(path).metadata.num_row_groups)
-            except (OSError, ValueError, KeyError):
+            except (OSError, ValueError, KeyError, ArrowException):
                 # Not a single readable parquet file (directory table,
-                # remote layout): assume splittable — never fan out.
+                # remote layout, a footer Arrow cannot decode): assume
+                # splittable — never fan out.
                 n = 1 << 30
         _SCAN_UNITS[key] = n
     return n

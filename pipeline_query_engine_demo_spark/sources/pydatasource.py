@@ -36,7 +36,14 @@ def register_source(spark, source_cls: type) -> None:
     """Register a Python DataSource, tolerating ONLY the
     already-registered case — any other registration failure (bad
     class, serialization error, API mismatch) propagates instead of
-    deferring to a confusing format-not-found error at read time."""
+    deferring to a confusing format-not-found error at read time.
+
+    The registration captures the worker environment, so the package
+    root goes on the workers' PYTHONPATH first: they import
+    ``source_cls`` by module path from any working directory."""
+    from pipeline_query_engine_demo_spark.session import ensure_package_on_workers
+
+    ensure_package_on_workers(spark)
     try:
         spark.dataSource.register(source_cls)
     except Exception as exc:  # noqa: BLE001 — filtered below

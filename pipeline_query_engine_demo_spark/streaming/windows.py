@@ -32,15 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-#: Streams cannot infer schemas, and the fixture has shipped with two
-#: ``ts`` physical types (ns → BIGINT under the legacy flag; µs →
-#: TIMESTAMP_NTZ) — so the reader takes its schema from one batch
-#: footer read and normalizes exactly like sources.catalog.load_table.
-
-#: Last drain's StreamingQueryProgress dicts (diagnostics; see
-#: run_to_memory). Never consulted by query logic.
-LAST_PROGRESS: list = []
-
 
 def _stream_source_dir(sf_dir: str, table_file: str = "events.parquet") -> str:
     """The file stream source requires a directory; the fixture is a
@@ -244,13 +235,6 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
-    # Diagnostics only (r13): stash the drain's progress events so the
-    # per-drain fixed-cost breakdown (queryPlanning / addBatch /
-    # walCommit / stateOperators) can be read AFTER the query object is
-    # gone — the evidence behind the streaming floor table in SCALE.md.
-    # Overwritten per drain; never read by any query path.
-    global LAST_PROGRESS
-    LAST_PROGRESS = [p for p in q.recentProgress]
     if max_data_batches is not None or min_data_batches is not None:
         assert_data_batches(
             q,

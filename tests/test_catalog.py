@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pipeline_query_engine_demo_spark.sources.catalog import TABLES, load_table, register_views
@@ -57,3 +59,82 @@ def test_events_loader_handles_both_timestamp_generations(spark, tmp_path):
     assert dict(df.dtypes)["ts"] == "timestamp"
     got = df.select(F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("s")).collect()[0].s
     assert got == "2024-01-01 00:00:00.000001"
+
+
+def test_shuffle_partitions_follow_session_cores(spark):
+    """One shuffle (and streaming state) partition per core, not a fixed
+    count: the factory's default is the session's defaultParallelism."""
+    key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+
+
+def test_shuffle_partitions_override_wins(spark):
+    from pipeline_query_engine_demo_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        assert get_spark("pytest", **{key: "7"}).conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _mem_mib(value: str) -> int:
+    assert value.endswith("m"), value
+    return int(value[:-1])
+
+
+def test_default_driver_memory_fits_physical_memory():
+    from pipeline_query_engine_demo_spark.session import _default_driver_memory
+
+    with open("/proc/meminfo") as f:
+        total_kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    heap = _mem_mib(_default_driver_memory())
+    assert 0 < heap <= total_kib // 1024
+    assert heap <= 16 * 1024
+
+
+def test_default_driver_memory_falls_back_without_meminfo(tmp_path):
+    from pipeline_query_engine_demo_spark.session import _default_driver_memory
+
+    assert _mem_mib(_default_driver_memory(str(tmp_path / "absent"))) == 16 * 1024
+
+
+def test_python_datasource_reads_outside_repo_root(tmp_path):
+    """Python workers import the package from any working directory: a
+    vanilla session started with cwd outside the repo (and no PYTHONPATH
+    naming it) reads the demo data source on its workers."""
+    import subprocess
+    import sys
+    import textwrap
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from pyspark.sql import SparkSession
+        from pipeline_query_engine_demo_spark.sources.pydatasource import (
+            SequenceFeedSource, register_source,
+        )
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
+        register_source(spark, SequenceFeedSource)
+        df = spark.read.format("sequence_feed").option("n_rows", 50).load()
+        print("ROWS", df.count())
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "ROWS 50" in out.stdout, out.stderr[-3000:]

@@ -135,3 +135,18 @@ def test_jaccard_from_units_matches_restricted_jaccard_pairs(spark):
     a = sorted(map(tuple, per_chain.collect()))
     b = sorted(map(tuple, shared.collect()))
     assert a == b
+
+
+def test_scan_units_assume_splittable_on_arrow_error(monkeypatch, tmp_path):
+    # An Arrow error from the footer read (e.g. an encoding
+    # Arrow does not implement) takes the quiet assume-splittable path.
+    import pyarrow.lib
+    import pyarrow.parquet as pq
+
+    def unreadable(path):
+        raise pyarrow.lib.ArrowNotImplementedError("unsupported encoding")
+
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    path = tmp_path / "t.parquet"
+    path.write_bytes(b"PAR1")
+    assert catalog._scan_units(str(path)) == 1 << 30

@@ -1651,3 +1651,21 @@ def test_tws_soak_state_plateaus_under_continuous_trigger(spark, tmp_path):
             .load(ckpt1)
         )
         assert st.count() == n_users
+
+
+def test_tumbling_drain_state_partitions_match_cores(spark, sf_dir):
+    """A stateful drain runs one state store per core: the streaming
+    shuffle is not coalesced by AQE, so its width is the session's
+    shuffle-partition default, sized from defaultParallelism."""
+    events = streaming.read_events_stream(spark, sf_dir)
+    q = (
+        streaming.tumbling_counts(events)
+        .writeStream.format("memory")
+        .queryName("t_state_parts")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    ops = q.lastProgress["stateOperators"]
+    assert ops[0]["numShufflePartitions"] == spark.sparkContext.defaultParallelism
