@@ -17,8 +17,11 @@ import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.tracing import RETENTION, Tracer  # noqa: E402
 
 #: Headline set: one per major engine area (reference replica, agg,
 #: star join, window, as-of, time window, dedup pipeline, ANN, text,
@@ -263,6 +266,78 @@ def compact_line(payload: dict, detail_path: str, cap: int = 1900) -> str:
     return line
 
 
+def noop_write(df) -> None:
+    df.write.mode("overwrite").format("noop").save()
+
+
+def drop_run_blocks(spark) -> None:
+    """Unpersist the RDD blocks a run leaves in the block manager (lazy
+    localCheckpoints in the dedup/graph/sweep pipelines).
+
+    Runs BETWEEN timed runs, never inside one: every rep rebuilds its
+    DataFrames from the parquet inputs, so no later run can reference
+    an earlier run's checkpoint blocks — leaving them pinned only AGES
+    the session (late-session warm reps measured 1.5-2x slower than a
+    fresh session on identical plans). This is cleanup, the opposite of
+    caching: nothing is precomputed or reused across runs. Blocking
+    unpersist, so the removal cannot overlap the next timed run."""
+    it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
+    while it.hasNext():
+        try:
+            it.next().getValue().unpersist(True)
+        except Exception:
+            pass  # already cleaned by the ContextCleaner
+
+
+def record_error(errors: dict[str, str], name: str, exc: Exception) -> None:
+    """Record ``name``'s failure as ``"<ExceptionClass>: <first line>"``;
+    the full traceback goes to stderr."""
+    print(f"bench: {name} failed", file=sys.stderr)
+    traceback.print_exception(exc, file=sys.stderr)
+    lines = str(exc).strip().splitlines()
+    errors[name] = f"{type(exc).__name__}: {lines[0][:200] if lines else ''}"
+
+
+#: Tracer record fields a noop-sink bench pass does not measure.
+_UNMEASURED = ("plan_nodes", "rows_out", "sink_bytes", "sink_files")
+
+
+def traced_pass(spark, sf_dir: str, names: list[str], builders: dict):
+    """One pass over ``names``, each query's build and noop write wrapped
+    in ``build:{name}`` / ``action:{name}`` spans of a perfbench Tracer.
+
+    Returns ``(walls, layers, errors)``: build+write seconds per query
+    that ran, the Tracer's per-query record for each of those, and
+    ``"<ExceptionClass>: <first line>"`` for each query that raised (the
+    pass goes on without it). The status stores are read once, after the
+    last query, so nothing is read between a query's build and action.
+    The noop sink writes no files, so the Tracer watches no sink dir."""
+    tracer = Tracer(spark, os.devnull)
+    walls: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        t0 = time.perf_counter()
+        try:
+            with tracer.span(f"build:{name}", "plans", name):
+                df = builders[name](spark, sf_dir)
+            with tracer.span(f"action:{name}", "exec", name):
+                noop_write(df)
+            walls[name] = round(time.perf_counter() - t0, 3)
+        except Exception as exc:  # noqa: BLE001 - recorded, the pass goes on
+            record_error(errors, name, exc)
+        drop_run_blocks(spark)
+    queries = tracer.collect({})["queries"]
+    layers = {
+        n: {
+            k: round(v, 4) if isinstance(v, float) else v
+            for k, v in queries[n].items()
+            if k not in _UNMEASURED
+        }
+        for n in walls
+    }
+    return walls, layers, errors
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -271,68 +346,12 @@ def main() -> None:
     from pipeline_query_engine_demo_spark import plans
     from pipeline_query_engine_demo_spark.session import get_spark
 
-    # Concurrent tier (round-10 verdict item 2 made repeatable): when
-    # SPARK_GRAFT_BENCH_CONCURRENT=N (N>0), the session launches under
-    # the FAIR scheduler and, after the serialized timed pass, the 17
-    # headline queries are re-run from N driver threads (one scheduler
-    # pool per query) and the aggregate wall is reported as
-    # "headline_concurrent_total" — the multiplexing number a shared
-    # cluster actually sees. Off by default: the driver's per-round
-    # record stays the serialized protocol, byte-compatible with every
-    # prior round. tools/concurrency_experiment.py remains the full
-    # assertion harness (result + plan fingerprints under concurrency);
-    # this flag is the affordable repeat-me dial.
-    conc = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_CONCURRENT", "0")))
-    spark = get_spark(
-        "bench",
-        # Bound the AppStatusStore stage retention so the between-runs
-        # parallelism snapshots iterate a few hundred summaries, not the
-        # whole session's history. UI metadata only — no effect on
-        # execution or timings.
-        **{
-            "spark.ui.retainedStages": "512",
-            **({"spark.scheduler.mode": "FAIR"} if conc else {}),
-        },
-    )
+    # RETENTION keeps every job, stage and SQL execution in the status
+    # stores until the Tracer reads them, so no query's record is
+    # truncated. UI metadata only — no effect on execution or timings.
+    spark = get_spark("bench", **RETENTION)
     spark.sparkContext.setLogLevel("ERROR")
     qs = plans.queries()
-
-    # Untimed warmup pass over the whole set: the first execution of
-    # each path pays JVM JIT, codegen compilation, Python-worker
-    # spin-up, and shuffle-service init — measured 2-3x inflation on
-    # the heavy queries (e.g. the MinHash pipeline 8.7s cold vs 4.5s
-    # steady on this box). The timed pass therefore reports
-    # steady-state throughput, which is the number that scales to a
-    # long-running cluster job and is stable round-over-round.
-    def drop_run_blocks() -> None:
-        # Unpersist the RDD blocks a run leaves in the block manager
-        # (lazy localCheckpoints in the dedup/graph/sweep pipelines).
-        # Runs BETWEEN timed runs, never inside one: every rep rebuilds
-        # its DataFrames from the parquet inputs, so no later run can
-        # reference an earlier run's checkpoint blocks — leaving them
-        # pinned only AGES the session (r12 session 5 measured late-
-        # session warm reps inflating 1.5-2x vs a fresh session on
-        # identical plans: thousands of dead persisted RDDs by the 4th
-        # corpus pass). This is cleanup, the opposite of caching —
-        # nothing is precomputed or reused across runs, and the timed
-        # window is unchanged.
-        # unpersist(True) — blocking (r12 ADVICE): non-blocking removal
-        # proceeds asynchronously and can overlap the NEXT timed run,
-        # reintroducing a sliver of the cross-run interference this
-        # cleanup exists to remove.
-        it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            try:
-                it.next().getValue().unpersist(True)
-            except Exception:
-                pass  # already cleaned by the ContextCleaner
-
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        dt = round(time.perf_counter() - t0, 3)
-        drop_run_blocks()
-        return dt
 
     # Tiering (see HOT_EXTENDED): "full" (default, the per-round record)
     # times every extended row; "hot" times the representative slice —
@@ -342,57 +361,23 @@ def main() -> None:
         q for q in EXTENDED if q in HOT_EXTENDED
     ]
 
-    # Per-query parallelism evidence (r12 verdict item 2: the flat
-    # 8-vs-32-core wall ratios at sf0.1 were flagged as "cpus ignored";
-    # they are actually driver-latency-bound plans, and this proves it
-    # the direct way): around each query's COLD pass — never inside a
-    # timed window — snapshot the AppStatusStore stage list and record
-    # the max task count any single stage ran with, the stage count, and
-    # the summed executor run time. At CPUS=32 a fanned query shows
-    # 32-wide stages and the same executor-ms as at CPUS=8 with 8-wide
-    # stages; wall stays flat because scheduling, not compute, is the
-    # local floor. The timed methodology is unchanged — these reads
-    # happen between runs, on an already-finished query.
-    _jsc = spark.sparkContext._jsc
-    _jvm = spark._jvm
-    _gw = spark.sparkContext._gateway
+    # Untimed-protocol first pass over the whole set: the first
+    # execution of each path pays JVM JIT, codegen compilation,
+    # Python-worker spin-up and shuffle-service init (2-3x inflation on
+    # the heavy queries), so the timed reps below report steady-state
+    # throughput. This cold pass is traced: its per-query "layers"
+    # record splits driver-side build from the action and attributes
+    # jobs, stages, executor time and shuffle bytes to each. A query
+    # that raises here is recorded under "errors" and not timed.
+    cold, layers, errors = traced_pass(spark, sf_dir, HEADLINE + ext_names, qs)
 
-    def stage_snapshot() -> dict:
-        store = _jsc.sc().statusStore()
-        stages = store.stageList(
-            _jvm.java.util.ArrayList(),
-            False,
-            False,
-            _gw.new_array(_jvm.double, 0),
-            _jvm.java.util.ArrayList(),
-        )
-        out, it = {}, stages.iterator()
-        while it.hasNext():
-            s = it.next()
-            out[(s.stageId(), s.attemptId())] = (
-                s.numCompleteTasks(),
-                s.executorRunTime(),
-            )
-        return out
-
-    # The warmup pass IS a cold pass — time it too, so the JSON carries
-    # both cold (first-execution, comparable to r2's single-warmup runs)
-    # and warm (steady-state, the number that scales to a long-running
-    # job) without any extra wall-clock.
-    par: dict[str, dict] = {}
-    cold = {}
-    _prev_snap = stage_snapshot()
-    for name in HEADLINE + ext_names:
-        cold[name] = run(name)
-        _snap = stage_snapshot()
-        _new = [v for k, v in _snap.items() if k not in _prev_snap]
-        _prev_snap = _snap
-        if _new:
-            par[name] = {
-                "max_stage_tasks": max(v[0] for v in _new),
-                "stages": len(_new),
-                "exec_ms": int(sum(v[1] for v in _new)),
-            }
+    def run(name: str) -> float:
+        t0 = time.perf_counter()
+        try:
+            noop_write(qs[name](spark, sf_dir))
+            return round(time.perf_counter() - t0, 3)
+        finally:
+            drop_run_blocks(spark)
 
     # Since r5 (r4 verdict item 1): n warm reps per query, reporting the
     # per-query MEDIAN under the same "queries"/"extended" keys (so the
@@ -421,8 +406,19 @@ def main() -> None:
         # next, so cross-round comparisons need the count to be visible.
         return m, ts[0], ts[-1], n
 
-    med = {name: median_run(name) for name in HEADLINE}
-    med_ext = {name: median_run(name) for name in ext_names}
+    def timed(names: list[str]) -> dict[str, tuple]:
+        out = {}
+        for name in names:
+            if name in errors:
+                continue
+            try:
+                out[name] = median_run(name)
+            except Exception as exc:  # noqa: BLE001 - recorded, the rest is timed
+                record_error(errors, name, exc)
+        return out
+
+    med = timed(HEADLINE)
+    med_ext = timed(ext_names)
     timings = {n: v[0] for n, v in med.items()}
     extended = {n: v[0] for n, v in med_ext.items()}
 
@@ -442,60 +438,26 @@ def main() -> None:
         "extended_total": round(sum(extended.values()), 3),
         "tier": tier,
         "extended": extended,
-        "cold_headline_total": round(sum(cold[n] for n in HEADLINE), 3),
-        # r11 advisor: with SPARK_GRAFT_BENCH_CONCURRENT>0 the WHOLE
-        # session runs under FAIR (the flag sets spark.scheduler.mode at
-        # session build), so even the "serialized timed pass" in that run
-        # executed under FAIR, not the default FIFO — such a record mixes
-        # protocols and must never be used as the tripwire baseline
-        # (tools/exit_chain.sh's guard rejects scheduler != FIFO, same as
-        # the hot-tier rule).
-        "scheduler": "FAIR" if conc else "FIFO",
-        # Parallelism evidence (additive, r12 verdict item 2): cpus is
-        # the session's actual defaultParallelism (proves the env var
-        # took effect); the aggregate shows how many queries ran at
-        # least one stage at >= half the cluster width. Per-query
-        # breakdown in the detail sidecar under "parallelism".
+        "cold_headline_total": round(sum(cold[n] for n in HEADLINE if n in cold), 3),
+        # cpus is the session's actual defaultParallelism (proves the
+        # env var took effect).
         "cpus": spark.sparkContext.defaultParallelism,
+        "errors": errors,
     }
-    _widths = sorted(p["max_stage_tasks"] for p in par.values())
-    if _widths:
+    # How many queries ran at least one action stage at >= half the
+    # cluster width; per-query widths are in the detail "layers".
+    widths = sorted(r["max_stage_tasks"] for r in layers.values() if r["stages"])
+    if widths:
         payload["parallelism"] = {
-            "max_stage_tasks_p50": _widths[len(_widths) // 2],
-            "max_stage_tasks_max": _widths[-1],
-            "queries_ge_half_cpus": sum(
-                1 for w in _widths if w * 2 >= payload["cpus"]
-            ),
-            "n_measured": len(_widths),
+            "max_stage_tasks_p50": widths[len(widths) // 2],
+            "max_stage_tasks_max": widths[-1],
+            "queries_ge_half_cpus": sum(1 for w in widths if w * 2 >= payload["cpus"]),
+            "n_measured": len(widths),
         }
-    if conc:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def run_pooled(name: str) -> float:
-            # Thread-local property: each query gets its own FAIR pool,
-            # so the fair share is per-query, matching
-            # tools/concurrency_experiment.py.
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-            return run(name)
-
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=conc) as ex:
-            list(ex.map(run_pooled, HEADLINE))
-        payload["headline_concurrent_total"] = round(time.perf_counter() - t0, 3)
-        payload["concurrent_threads"] = conc
-    # Full detail (per-rep spreads + per-query cold timings) goes to a
-    # sidecar file, NOT stdout: the driver keeps only the last ~2000
-    # chars of stdout, and round 5's spread-laden single line blew past
-    # that and was recorded unparsed (BENCH_r05.json parsed: null). The
-    # stdout line stays compact and driver-parseable; bench_compare.py
-    # reads the sidecar.
+    # Full detail (per-rep spreads, per-query cold timings and layer
+    # records) goes to a sidecar file, NOT stdout: the driver keeps only
+    # the last ~2000 chars of stdout. bench_compare.py reads the sidecar.
     detail = dict(payload)
-    # Cold-vs-warm attribution (r10 verdict item 7): the gap is session
-    # fixed costs + per-query first-execution codegen, measured by
-    # tools/coldstart_profile.py (r11 numbers: JVM launch 5.5 s, first
-    # action 3.3 s, first Parquet scan 1.3 s, Python worker pool 1.0 s,
-    # then ~1.9 s/query cold-vs-warm codegen delta — q1 3.1 s -> 1.2 s).
-    detail["coldstart_attribution"] = "tools/coldstart_profile.py"
     detail["spread"] = {n: [v[1], v[2]] for n, v in med.items()}
     detail["extended_spread"] = {n: [v[1], v[2]] for n, v in med_ext.items()}
     detail["rep_counts"] = {
@@ -503,7 +465,7 @@ def main() -> None:
         **{n: v[3] for n, v in med_ext.items()},
     }
     detail["cold"] = cold
-    detail["parallelism"] = par
+    detail["layers"] = layers
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),

@@ -636,7 +636,13 @@ class _RoundCheckpoints:
         eager-checkpoint job first (r13, guide §1.2: one driver sync per
         round, not two). Attribution is unchanged: a lazy localCheckpoint
         registers its RDD as persistent at call time, so the
-        before/after diff and the exact own-id read both still see it."""
+        before/after diff and the exact own-id read both still see it.
+
+        Caller contract for ``eager=False``: this call frees generation
+        k-2 before the new generation's blocks exist, so a lazy
+        checkpoint must be materialized by an action before the next
+        ``checkpoint()`` call, and its lineage may reference only the
+        immediately previous generation."""
         before = set(self._snapshot())
         out = resilient_local_checkpoint(df, eager=eager)
         created = {k: v for k, v in self._snapshot().items() if k not in before}

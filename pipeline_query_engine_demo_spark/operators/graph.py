@@ -11,8 +11,9 @@ Per iteration: one shuffle join of the edge list with the rank table on
 ``src`` and one groupBy on ``dst`` — the textbook distributed PageRank
 data flow (edges never move to the driver; the rank table is
 node-sized, never edge-sized). The iteration count is a small fixed
-constant so the whole train is one lazy DAG; ``localCheckpoint`` per
-round cuts the replayed lineage exactly like the k-means loop.
+constant so the whole train is one lazy DAG with no per-round
+``localCheckpoint``: each round reads the previous rank table once, so
+the plan grows linearly with ``iterations``.
 
 Cross-engine determinism (mirrored by the DuckDB oracle in
 plans/analytics.py): per-edge contributions ``round(r/outdeg, 9)``
@@ -56,6 +57,10 @@ def pagerank(
     ``1 - damping``: the oracle writes the literal 0.15, and IEEE
     ``1.0 - 0.85`` is 0.15000000000000002 — the same decimal literal on
     both sides guarantees bit-identical arithmetic.
+
+    No round is lineage-cut, so plan depth (and Catalyst/AQE compile
+    time) grows linearly with ``iterations``; the API assumes a small
+    fixed count, as the registered queries use.
     """
     edges = edges.select("src", "dst").localCheckpoint(eager=False)
     nodes = edges.select(F.col("src").alias("node")).distinct()
@@ -110,10 +115,9 @@ def bfs_distances(edges: DataFrame, seed: DataFrame, max_hops: int) -> DataFrame
 
     Scale: the textbook distributed frontier BFS — per hop, one
     edge⋈frontier shuffle join plus a distinct; the frontier and
-    visited tables are node-sized, never edge-sized, and lazy
-    ``localCheckpoint`` per round cuts replayed lineage exactly like
-    the PageRank loop above. Hop count is a small constant, so the
-    whole walk is one DAG."""
+    visited tables are node-sized, never edge-sized, and a lazy
+    ``localCheckpoint`` of each hop's frontier cuts replayed lineage.
+    Hop count is a small constant, so the whole walk is one DAG."""
     edges = edges.select("src", "dst").localCheckpoint(eager=False)
     frontier = seed.select(
         F.col("node").cast("bigint").alias("node"), F.lit(0).alias("dist")
@@ -160,8 +164,8 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     Scale: per round, one combinable degree groupBy (map-side partial
     counts) and two node-keyed left-semi joins — state is edge-sized
     and MONOTONICALLY SHRINKING, nothing ever reaches the driver, and
-    lazy ``localCheckpoint`` per round cuts replayed lineage exactly
-    like the PageRank/BFS/Bellman-Ford loops above. Round count is a
+    a lazy ``localCheckpoint`` of each round's edges cuts replayed
+    lineage, as the BFS/Bellman-Ford frontiers do. Round count is a
     small fixed constant; the peel converges in few rounds on real
     graphs because each sweep removes every currently-underweight node
     at once (not one node at a time)."""
@@ -217,11 +221,12 @@ def label_propagation(edges: DataFrame, iterations: int) -> DataFrame:
     Scale: per round, one edge⋈label shuffle join, one combinable
     (node, label) count, and one node-partitioned argmax window whose
     partitions are bounded by a node's DEGREE (never corpus-sized);
-    label state is node-sized and lineage is cut per round like every
-    iterative-graph loop in this module. Density caveat: on a
-    near-clique graph synchronous LPA oscillates — use the REPEAT
-    co-purchase graph (weight >= 2), where it settles into stable
-    communities within a few rounds."""
+    label state is node-sized. As in ``pagerank``, no round is
+    lineage-cut, so plan depth grows linearly with ``iterations``; the
+    API assumes a small fixed count. Density caveat: on a near-clique
+    graph synchronous LPA oscillates — use the REPEAT co-purchase graph
+    (weight >= 2), where it settles into stable communities within a
+    few rounds."""
     from pyspark.sql import Window
 
     edges = edges.select("src", "dst").localCheckpoint(eager=False)
@@ -267,8 +272,8 @@ def sssp_distances(
     min, and one node-keyed improvement join — all state node-sized.
     Only nodes whose distance IMPROVED last round relax their out-edges
     (the frontier), so settled regions of a 100 TB graph stop paying
-    per-round cost; lazy ``localCheckpoint`` per round cuts replayed
-    lineage exactly like the PageRank/BFS loops above."""
+    per-round cost; a lazy ``localCheckpoint`` of each round's frontier
+    cuts replayed lineage, as in ``bfs_distances``."""
     edges = edges.select("src", "dst", "w").localCheckpoint(eager=False)
     seed0 = seed.select(
         F.col("node").cast("bigint").alias("node"),

@@ -1,7 +1,11 @@
-"""Unit tests for the bench regression tripwire (tools/bench_compare.py)
-— pure Python, no Spark: the tool's verdict logic must flag exactly the
-median-past-1.5x-spread-max case and tolerate format drift (driver
-wrapper vs sidecar, missing spreads, added/dropped queries)."""
+"""Tests for the bench harness and its tools.
+
+The tripwire tests (tools/bench_compare.py) are pure Python, no Spark:
+its verdict logic must flag exactly the median-past-1.5x-spread-max case
+and tolerate format drift (driver wrapper vs sidecar, missing spreads,
+added/dropped queries). The rest run bench.py's traced pass and main()
+on the shared session: every timed row gets a per-layer record, and one
+failing query is recorded instead of aborting the run."""
 
 from __future__ import annotations
 
@@ -10,11 +14,10 @@ import subprocess
 import sys
 import os
 
-TOOL = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tools",
-    "bench_compare.py",
-)
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOL = os.path.join(REPO, "tools", "bench_compare.py")
 
 
 def _run(tmp_path, cur: dict, prev: dict) -> subprocess.CompletedProcess:
@@ -105,3 +108,71 @@ def test_bench_compact_line_degrades_instead_of_dying():
     # an already-compact payload passes through untouched
     small = {"metric": "headline_total", "value": 1.0, "queries": {"q1": 1.0}}
     assert json.loads(bench.compact_line(dict(small), "/tmp/D.json")) == small
+
+
+TRACED = ["q1_pricing_summary", "streaming_tumbling_window_counts"]
+
+
+@pytest.fixture(scope="module")
+def traced_layers(spark, sf_dir):
+    import bench
+    from pipeline_query_engine_demo_spark import plans
+
+    walls, layers, errors = bench.traced_pass(spark, sf_dir, TRACED, plans.queries())
+    assert errors == {} and set(walls) == set(TRACED)
+    return layers
+
+
+def test_traced_pass_splits_build_from_action(traced_layers):
+    """Each bench row carries one per-layer record from the perfbench
+    Tracer; the streaming drain runs its micro-batch at build time and
+    still has an action of its own."""
+    assert set(traced_layers) == set(TRACED)
+    for name, row in traced_layers.items():
+        assert row["build_s"] > 0 and row["action_s"] > 0, (name, row)
+        assert row["stages"] >= 1, (name, row)
+        assert row["truncated"] is False, (name, row)
+    assert traced_layers["streaming_tumbling_window_counts"]["microbatches"] >= 1
+
+
+def test_query_profile_prints_the_bench_record(traced_layers, sf_dir):
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "query_profile.py"),
+         "q1_pricing_summary", sf_dir, "1"],
+        capture_output=True, text=True, timeout=900,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    rec = json.loads(r.stdout.strip().splitlines()[-1])
+    assert list(rec) == ["q1_pricing_summary"]
+    assert set(rec["q1_pricing_summary"]) == set(traced_layers["q1_pricing_summary"])
+    assert rec["q1_pricing_summary"]["truncated"] is False
+
+
+def test_bench_records_a_failing_query_and_times_the_rest(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+):
+    import bench
+    from pipeline_query_engine_demo_spark import plans
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("planted failure\nsecond line")
+
+    registry = plans.queries()
+    monkeypatch.setattr(plans, "queries", lambda: {**registry, "boom": boom})
+    monkeypatch.setattr(bench, "HEADLINE", ["q1_pricing_summary", "boom"])
+    monkeypatch.setattr(bench, "EXTENDED", [])
+    detail_path = tmp_path / "detail.json"
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(detail_path))
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPS", "1")
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_TIER", raising=False)
+    bench.main()
+    payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    detail = json.loads(detail_path.read_text())
+    for rec in (payload, detail):
+        assert rec["errors"] == {"boom": "RuntimeError: planted failure"}
+        assert list(rec["queries"]) == ["q1_pricing_summary"]
+        assert rec["value"] == rec["queries"]["q1_pricing_summary"] > 0
+        assert rec["extended_total"] == 0
+    assert list(detail["cold"]) == ["q1_pricing_summary"]
+    assert list(detail["layers"]) == ["q1_pricing_summary"]

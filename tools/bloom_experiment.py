@@ -2,9 +2,9 @@
 
 Runs the bloom_filter_pruned_join aggregation twice — once with
 InjectRuntimeFilter enabled (the registered query's confs) and once
-with it disabled — and measures actual shuffle WRITE bytes via the
-AppStatusStore stage metrics (cumulative across the app; deltas are
-taken around each run). The bloom filter's promise is map-side row
+with it disabled — and measures actual shuffle WRITE bytes of each
+variant's timed run, read from the ``action:`` span perfbench's Tracer
+records around it. The bloom filter's promise is map-side row
 pruning BEFORE the exchange, so shuffle write is the honest meter —
 scan bytes are identical in both variants (the filter sits above the
 scan, not inside it; that side is DPP's job, plans/partitioned.py).
@@ -33,29 +33,13 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
 
 def main() -> None:
+    from perfbench.tracing import RETENTION, Tracer
     from pipeline_query_engine_demo_spark.plans import relational
     from pipeline_query_engine_demo_spark.session import get_spark
 
-    spark = get_spark("bloom-experiment")
+    spark = get_spark("bloom-experiment", **RETENTION)
     spark.sparkContext.setLogLevel("ERROR")
-    jvm = spark._jvm
-    store = spark.sparkContext._jsc.sc().statusStore()
-
-    def shuffle_write_bytes() -> int:
-        # AppStatusStore.stageList(statuses, details, withSummaries,
-        # unsortedQuantiles, taskStatus) — cumulative across all stages
-        # retained so far; callers take deltas.
-        stages = store.stageList(
-            jvm.java.util.ArrayList(),
-            False,
-            False,
-            spark.sparkContext._gateway.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
-        )
-        it, total = stages.iterator(), 0
-        while it.hasNext():
-            total += it.next().shuffleWriteBytes()
-        return total
+    tracer = Tracer(spark, os.devnull)  # noop sink: no sink dir to watch
 
     def agg():
         return (
@@ -88,15 +72,13 @@ def main() -> None:
         try:
             df = agg()
             df.write.format("noop").mode("overwrite").save()  # warmup
-            b0 = shuffle_write_bytes()
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            b1 = shuffle_write_bytes()
+            with tracer.span(f"action:{label}", "exec", label):
+                t0 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                wall = time.perf_counter() - t0
             plan = df._jdf.queryExecution().executedPlan().toString()
             results[label] = sorted(map(tuple, agg().collect()))
             out[label] = {
-                "shuffle_write_bytes": b1 - b0,
                 "wall_s": round(wall, 3),
                 "might_contain_in_plan": "might_contain" in plan,
             }
@@ -106,6 +88,9 @@ def main() -> None:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
+    layers = tracer.collect({})["queries"]
+    for label in variants:
+        out[label]["shuffle_write_bytes"] = layers[label]["shuffle_write_bytes"]
     assert out["bloom_on"]["might_contain_in_plan"]
     assert not out["bloom_off"]["might_contain_in_plan"]
     assert results["bloom_on"] == results["bloom_off"], "results diverged"

@@ -24,8 +24,9 @@ python - <<'PY' || { echo "FATAL: baseline not a full-tier FIFO record — find 
 import json
 d = json.load(open('/tmp/bench_detail_prior.json'))
 assert d.get('tier') == 'full', f"baseline tier={d.get('tier')} — find a full-tier commit"
-# conc>0 runs execute even the serialized pass under FAIR (mixed
-# protocol); pre-r12 records lack the key and were all FIFO.
+# Records from bench.py's former concurrent knob ran even the serialized
+# pass under FAIR (mixed protocol). Records without the key (before r12,
+# and since the knob was removed) are all FIFO.
 assert d.get('scheduler', 'FIFO') == 'FIFO', f"baseline scheduler={d.get('scheduler')}"
 PY
 

@@ -1,10 +1,11 @@
-"""Per-query stage-level profile: where does the wall-clock go?
+"""Per-query layer record: where does the wall-clock go?
 
-Runs one registered query warm (1 untimed pass + N timed passes to the
-noop sink) and attributes the LAST timed pass's cost across its jobs
-and stages using the AppStatusStore: per stage — wall span, executor
-run time (sum across tasks), shuffle read/write bytes, task count,
-and the first line of the stage's call-site description.
+Runs each named query ``reps`` times untraced (warm-up), then once more
+under the same traced pass ``bench.py`` runs cold, and prints the bench's
+``layers`` map for them as one JSON line: build vs action seconds, jobs
+started at build time, stages, tasks, executor run/CPU/GC seconds,
+shuffle and spill bytes, Python-worker bytes and streaming micro-batch
+durations per query. Exits 1 if a query raised.
 
 Usage: python tools/query_profile.py <query_name>[,<query_name>...] [sf_dir] [reps]
 """
@@ -14,7 +15,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -23,85 +23,23 @@ REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
 
 def main() -> None:
+    import bench
     from pipeline_query_engine_demo_spark import plans
     from pipeline_query_engine_demo_spark.session import get_spark
 
-    spark = get_spark("query-profile")
+    spark = get_spark("query-profile", **bench.RETENTION)
     spark.sparkContext.setLogLevel("ERROR")
     qs = plans.queries()
-    for name in sys.argv[1].split(","):
-        profile_one(spark, qs, name)
-
-
-def profile_one(spark, qs, name: str) -> None:
-    build = qs[name]
-
-    def run() -> float:
-        t0 = time.perf_counter()
-        build(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - t0
-
-    walls = [run() for _ in range(REPS)]  # first rep is the warmup
-
-    # Timed, profiled pass: snapshot stage list before/after.
-    jvm = spark._jvm
-    store = spark.sparkContext._jsc.sc().statusStore()
-
-    def stage_rows():
-        stages = store.stageList(
-            jvm.java.util.ArrayList(),
-            False,
-            False,
-            spark.sparkContext._gateway.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
-        )
-        rows, it = {}, stages.iterator()
-        while it.hasNext():
-            s = it.next()
-            sub = s.submissionTime()
-            comp = s.completionTime()
-            rows[(s.stageId(), s.attemptId())] = {
-                "name": str(s.name()).split("\n")[0][:90],
-                "tasks": s.numCompleteTasks(),
-                "exec_ms": s.executorRunTime(),
-                "cpu_ms": s.executorCpuTime() // 1_000_000,
-                "sr_mb": round(s.shuffleReadBytes() / 1e6, 2),
-                "sw_mb": round(s.shuffleWriteBytes() / 1e6, 2),
-                "in_mb": round(s.inputBytes() / 1e6, 2),
-                "sub": sub.get().getTime() if sub.isDefined() else None,
-                "comp": comp.get().getTime() if comp.isDefined() else None,
-            }
-        return rows
-
-    before = stage_rows()
-    t0 = time.perf_counter()
-    build(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-    wall = time.perf_counter() - t0
-    after = stage_rows()
-
-    new = {k: v for k, v in after.items() if k not in before}
-    ordered = sorted(new.items(), key=lambda kv: kv[1]["sub"] or 0)
-    total_exec = sum(v["exec_ms"] for _, v in new.items())
-    print(json.dumps({"query": name, "warm_walls": [round(w, 3) for w in walls],
-                      "profiled_wall": round(wall, 3),
-                      "stages": len(new), "total_exec_ms": total_exec}))
-    prev_end = None
-    for (sid, att), v in ordered:
-        gap = ""
-        if prev_end is not None and v["sub"] is not None:
-            g = v["sub"] - prev_end
-            if g > 20:
-                gap = f"  (+{g}ms gap)"
-        span = (
-            (v["comp"] - v["sub"]) if v["comp"] and v["sub"] else None
-        )
-        print(
-            f"  stage {sid:>4} span={span if span is not None else '?':>6}ms "
-            f"exec={v['exec_ms']:>7}ms cpu={v['cpu_ms']:>7}ms tasks={v['tasks']:>3} "
-            f"in={v['in_mb']:>8} sr={v['sr_mb']:>7} sw={v['sw_mb']:>7}  {v['name']}{gap}"
-        )
-        if v["comp"]:
-            prev_end = v["comp"]
+    names = sys.argv[1].split(",")
+    for _ in range(REPS):
+        for name in names:
+            bench.noop_write(qs[name](spark, SF_DIR))
+            bench.drop_run_blocks(spark)
+    _, layers, errors = bench.traced_pass(spark, SF_DIR, names, qs)
+    print(json.dumps(layers))
+    if errors:
+        print(json.dumps({"errors": errors}), file=sys.stderr)
+        sys.exit(1)
 
 
 if __name__ == "__main__":
