@@ -15,11 +15,8 @@ per-iteration steps are plain relational ops:
 Scale shape: per iteration the corpus shuffles twice (dot-product agg,
 mean agg) and the centroid table broadcasts; the per-id norm table is
 iteration-invariant and computed once before the loop. Nothing
-corpus-sized ever sits on the driver. The iteration count is a fixed
-small constant, so the whole train is one lazy DAG; the exploded corpus
-and norm table are ``localCheckpoint``-ed once and each round's
-centroid/assignment tables per iteration to cut lineage, exactly like
-``dedup.connected_components``.
+corpus-sized ever sits on the driver. The train runs under the one loop
+policy of ``operators.rounds``; the whole train is one lazy DAG.
 
 Cross-engine determinism (the DuckDB oracle mirrors every step): all
 dot products and means accumulate ``round(x, 9)`` terms as
@@ -33,6 +30,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from pipeline_query_engine_demo_spark.functions.rounding import round_half_up
+from pipeline_query_engine_demo_spark.operators.rounds import Rounds
 from pyspark.sql import DataFrame
 
 #: Exact accumulator type: scale 12 holds round(x, 9) terms exactly;
@@ -184,32 +182,22 @@ def kmeans_train(
             f"iterations must be >= 1, got {iterations}: zero rounds would "
             "return no assignment table"
         )
-    # The exploded corpus feeds 2 aggregations per iteration plus the
-    # norm table; the centroid/assignment tables feed the next round
-    # twice each. Lazy localCheckpoints cut the re-scan of the parquet
-    # + explode lineage (same pattern as dedup's banded bucket table).
-    # Per-id squared norms never change across iterations — computed
-    # once here (and checkpointed) instead of once per assign round.
-    e = explode_dims(corpus, id_col, vec_col).localCheckpoint(eager=False)
-    nv = (
-        _sq_norms(e, id_col, "val")
-        .withColumnRenamed("_n2", "nv")
-        .localCheckpoint(eager=False)
-    )
+    # Cut once: the exploded corpus (2 aggregations per round plus the
+    # norm table) and the per-id squared norms, which never change
+    # across rounds. The centroid table is replaced each round
+    # (assign_cells reads it twice: the broadcast dot join and the norm
+    # aggregate); of the assignments, which the round's update reads
+    # once, only the final one is cut (the caller reads it too).
+    loop = Rounds()
+    e = loop.cut(explode_dims(corpus, id_col, vec_col))
+    nv = loop.cut(_sq_norms(e, id_col, "val").withColumnRenamed("_n2", "nv"))
     cent = init_centroids
     assign = None
-    # r13: intermediate assignments are consumed exactly ONCE (by the
-    # round's centroid update), so cutting them bought nothing and cost
-    # one semi-eager AQE materialization (blocking driver sync,
-    # ~130-400 ms profiled) per round — only the FINAL assignment, which
-    # both the last update and the caller consume, keeps its cut. The
-    # centroid table stays cut per round: assign_cells consumes it twice
-    # (the broadcast dot join and the norm aggregate).
     for i in range(iterations):
         assign = assign_cells(e, id_col, cent, nv=nv)
         if i == iterations - 1:
-            assign = assign.localCheckpoint(eager=False)
-        cent = update_centroids(e, assign, id_col).localCheckpoint(eager=False)
+            assign = loop.cut(assign)
+        cent = loop.replace(update_centroids(e, assign, id_col))
     return cent, assign
 
 

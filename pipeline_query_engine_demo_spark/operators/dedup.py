@@ -18,6 +18,9 @@ Scale design (the 100 TB story):
 - **n-gram Jaccard** without an LSH prefilter self-joins the inverted
   shingle index; that is quadratic in per-shingle document frequency and
   is therefore only exposed for bounded inputs / post-LSH verification.
+- **Connected components** (both variants) run under the one loop
+  policy of ``operators.rounds``: lazy resilient cuts, two live
+  generations of replaced state, one convergence error.
 
 Cross-engine determinism: every hash is md5 hex (identical in Spark and
 DuckDB), mins/sorts over hex strings are binary-collation stable, and
@@ -36,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Column
 
 from pipeline_query_engine_demo_spark.functions.text import distinct_tokens, shingles
+from pipeline_query_engine_demo_spark.operators.rounds import Rounds
 from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 
 #: Number of MinHash hash functions and how they are banded for LSH.
@@ -470,8 +474,10 @@ def near_dup_pairs(
         # rebuild the group map it actually uses (its expansion joins
         # re-scan the corpus several times anyway); the bypass path pays
         # one lean combinable-aggregate job and persists nothing.
+        # NULL texts count in neither side (count_distinct skips
+        # NULLs), so they are never taken for mutual clones.
         st = df.agg(
-            F.count(F.lit(1)).alias("total"),
+            F.count(F.col(text_col)).alias("total"),
             F.count_distinct(F.sha2(F.col(text_col), 256)).alias("uniq"),
         ).first()
         dups = (st.total or 0) - (st.uniq or 0)
@@ -577,95 +583,6 @@ def near_dup_pairs(
     return verified.filter(F.col("jaccard") >= threshold)
 
 
-class _RoundCheckpoints:
-    """Bounded block-manager footprint for iterative localCheckpoint
-    loops: each round's eager checkpoint blocks are freed as soon as the
-    NEXT round's state is materialized (two live rounds max, instead of
-    every round's blocks surviving until session end).
-
-    Why it matters: at ×100 scale the CC loops checkpoint a ~27M-edge
-    graph per round; without cleanup those blocks accumulate across
-    rounds AND across queries in the session, and whether later rounds'
-    blocks land in memory or spill to disk flipped wall time ~3× in the
-    round-10 scale experiment (SCALE.md). Only RDD ids that appeared in
-    the block manager during this loop's own checkpoint calls are ever
-    unpersisted — caller caches are untouched.
-
-    TWO generations stay live, not one: round k's convergence check
-    still reads round k-1's state AFTER round k's checkpoint
-    materializes, and an unpersisted LOCAL checkpoint is unrecoverable
-    (lineage is truncated) — freeing k-1 at that point would crash the
-    very next job. Only round k-2's blocks, which nothing can reference
-    any more, are freed."""
-
-    def __init__(self, spark) -> None:
-        self._jmap = spark.sparkContext._jsc.getPersistentRDDs
-        self._hist: list[list] = []  # [..., round k-1 rdds, round k rdds]
-
-    def _snapshot(self) -> dict:
-        out = {}
-        it = self._jmap().entrySet().iterator()
-        while it.hasNext():
-            entry = it.next()
-            out[int(entry.getKey())] = entry.getValue()
-        return out
-
-    @staticmethod
-    def _own_rdd_id(df: DataFrame) -> int | None:
-        """RDD id of THIS DataFrame's checkpointed internal RDD.
-
-        ``Dataset.localCheckpoint`` returns a Dataset whose analyzed
-        plan is a ``LogicalRDD`` wrapping exactly the RDD that was
-        persisted — reading its id lets attribution be exact instead of
-        a global before/after diff of the block manager (which would
-        misattribute an RDD persisted concurrently by another thread or
-        stream on the shared SparkContext, and unpersisting someone
-        else's LOCAL checkpoint is unrecoverable). Returns None when the
-        plan shape differs (version drift) — callers must then fall back
-        conservatively."""
-        try:
-            return int(df._jdf.queryExecution().analyzed().rdd().id())
-        except Exception:
-            return None
-
-    def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
-        """``eager=False`` registers the checkpoint RDD but defers block
-        materialization to the caller's next action — callers that
-        immediately run a count/aggregate over the result use this to
-        fold materialization into that job instead of paying a separate
-        eager-checkpoint job first (r13, guide §1.2: one driver sync per
-        round, not two). Attribution is unchanged: a lazy localCheckpoint
-        registers its RDD as persistent at call time, so the
-        before/after diff and the exact own-id read both still see it.
-
-        Caller contract for ``eager=False``: this call frees generation
-        k-2 before the new generation's blocks exist, so a lazy
-        checkpoint must be materialized by an action before the next
-        ``checkpoint()`` call, and its lineage may reference only the
-        immediately previous generation."""
-        before = set(self._snapshot())
-        out = resilient_local_checkpoint(df, eager=eager)
-        created = {k: v for k, v in self._snapshot().items() if k not in before}
-        own = self._own_rdd_id(out)
-        if own is not None and own in created:
-            # Exact attribution: track only the RDD this checkpoint made.
-            created = {own: created[own]}
-        elif len(created) > 1:
-            # Ambiguous (concurrent persists appeared in the window and
-            # the exact id could not be read): leak this round's blocks
-            # — bounded, reclaimed by the ContextCleaner at session end —
-            # rather than risk unpersisting a foreign local checkpoint.
-            created = {}
-        self._hist.append(list(created.values()))
-        if len(self._hist) > 2:
-            for jrdd in self._hist.pop(0):
-                try:
-                    jrdd.unpersist(False)
-                except Exception:
-                    pass  # already cleaned by the ContextCleaner
-        return out
-
-
 def connected_components(
     nodes: DataFrame, edges: DataFrame, id_col: str, max_iter: int = 15
 ) -> DataFrame:
@@ -682,40 +599,30 @@ def connected_components(
     below (same join primitives, O(log n) rounds regardless of
     diameter) — the two are asserted label-identical in tests.
 
-    Checkpointing via ``localCheckpoint`` truncates the lineage each
-    round so the plan doesn't grow exponentially with iterations — and
-    ``sym`` itself is checkpointed so the edge-PRODUCING pipeline (the
-    full LSH + prefilter + Jaccard-verify DAG when called from
-    dedup_clusters) materializes once instead of re-executing inside
-    every iteration's join.
+    Labels are replaced each round (``Rounds.replace``). ``sym`` is cut
+    eagerly, once, so the edge-PRODUCING pipeline (the full LSH +
+    prefilter + Jaccard-verify DAG when called from dedup_clusters)
+    materializes before the loop instead of inside every round's join.
+    One driver sync per round: the new label carries an inline
+    ``_chg`` flag (a strictly smaller neighbor label arrived), and the
+    filter-count that returns the changed count is also the job that
+    materializes the round's cut.
     """
-    # sym is EAGER and materialized BEFORE the round tracker exists: it
-    # is read by every round, so its blocks must never enter the
-    # tracker's per-round sets (a lazy checkpoint would materialize
-    # inside round 1's job and be misattributed to round 1 — then freed
-    # two rounds later, which is fatal for a lineage-truncated RDD).
     sym = resilient_local_checkpoint(
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct(),
         eager=True,
     )
-    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("cluster_id"))
-    rounds = _RoundCheckpoints(nodes.sparkSession)
-    # r13 (guide §1.2/§2.4): ONE driver sync per round instead of three.
-    # The convergence signal is computed INLINE as a boolean column while
-    # the new label is derived (new < old iff a strictly smaller neighbor
-    # label arrived — no join back against the old label table), the
-    # checkpoint is lazy, and the filter-count both materializes the
-    # round's blocks and returns the changed count in a single job —
-    # replacing the old eager-checkpoint job + separate join-count job.
-    for _ in range(max_iter):
+    loop = Rounds()
+
+    def step(labels: DataFrame) -> tuple[DataFrame, int]:
         neighbor_min = (
             sym.join(labels, sym.dst == labels.id)
             .groupBy("src")
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        new_labels = rounds.checkpoint(
+        new_labels = loop.replace(
             labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
             .select(
                 "id",
@@ -723,18 +630,13 @@ def connected_components(
                     F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
                 ).alias("cluster_id"),
                 (F.col("nbr_min") < F.col("cluster_id")).alias("_chg"),
-            ),
-            eager=False,
+            )
         )
         changed = new_labels.filter(F.col("_chg")).count()
-        labels = new_labels.select("id", "cluster_id")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations — "
-        "the graph has a component with diameter > max_iter; raise max_iter "
-        "or switch to the large-star/small-star variant for long chains"
-    )
+        return new_labels.select("id", "cluster_id"), changed
+
+    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("cluster_id"))
+    return loop.until_stable(labels, step, max_iter, "connected_components")
 
 
 def connected_components_star(
@@ -767,25 +669,15 @@ def connected_components_star(
     AND new.exceptAll(old) empty ⟺ new == old — rounds that changed
     the edge count (every round but the last) pay ONE cached count and
     zero join work; only the terminal round runs the one exceptAll.
-    ``localCheckpoint`` truncates lineage per round, as in the
-    propagation variant. At the fixed point every edge is
+    The edge set is replaced each round (``Rounds.replace``), and the
+    count that materializes each cut is the convergence count. At the
+    fixed point every edge is
     (component_min, member); members absent from the edge list are
     their own singleton clusters."""
-    rounds = _RoundCheckpoints(nodes.sparkSession)
-    # r13 (guide §1.2): lazy checkpoints — the per-round count both
-    # materializes the round's blocks and returns the convergence count
-    # in ONE job, replacing the old eager-checkpoint job + count job.
-    e = rounds.checkpoint(
-        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct(),
-        eager=False,
-    )
-    n_e = e.count()
-    for _ in range(max_iter):
+    loop = Rounds()
+
+    def step(state: tuple[DataFrame, int]) -> tuple[tuple[DataFrame, int], bool]:
+        e, n_e = state
         sym = e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -806,21 +698,20 @@ def connected_components_star(
             .select(F.col("m").alias("u"), F.col("u").alias("v"))
         )
         hang_self = small_min.select(F.col("m").alias("u"), "v")
-        new_e = rounds.checkpoint(
-            hang_smaller.unionByName(hang_self).distinct(), eager=False
-        )
+        new_e = loop.replace(hang_smaller.unionByName(hang_self).distinct())
         n_new = new_e.count()
-        if n_new == n_e and new_e.exceptAll(e).count() == 0:
-            e = new_e
-            break
-        e = new_e
-        n_e = n_new
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds — at O(log n) rounds this indicates n > 2^max_iter "
-            "components merging or a bug; raise max_iter"
+        changed = n_new != n_e or new_e.exceptAll(e).count() != 0
+        return (new_e, n_new), changed
+
+    e = loop.replace(
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .select(
+            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
+        .distinct()
+    )
+    e, _ = loop.until_stable((e, e.count()), step, max_iter, "connected_components_star")
     member_labels = e.select(
         F.col("v").alias("id"), F.col("u").alias("cluster_id")
     )

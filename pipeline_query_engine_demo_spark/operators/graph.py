@@ -10,10 +10,12 @@ weighting crawl domains by their co-citation graph).
 Per iteration: one shuffle join of the edge list with the rank table on
 ``src`` and one groupBy on ``dst`` — the textbook distributed PageRank
 data flow (edges never move to the driver; the rank table is
-node-sized, never edge-sized). The iteration count is a small fixed
-constant so the whole train is one lazy DAG with no per-round
-``localCheckpoint``: each round reads the previous rank table once, so
-the plan grows linearly with ``iterations``.
+node-sized, never edge-sized).
+
+Every loop here runs under the one loop policy of ``operators.rounds``
+(lazy resilient cuts, generation freeing, a plan-depth cut every
+``_CUT_EVERY`` rounds); the per-loop docstrings give only the reasons
+specific to that loop's cuts.
 
 Cross-engine determinism (mirrored by the DuckDB oracle in
 plans/analytics.py): per-edge contributions ``round(r/outdeg, 9)``
@@ -26,6 +28,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from pipeline_query_engine_demo_spark.operators.rounds import Rounds
 
 _DEC = "decimal(28,12)"
 
@@ -58,11 +62,13 @@ def pagerank(
     ``1.0 - 0.85`` is 0.15000000000000002 — the same decimal literal on
     both sides guarantees bit-identical arithmetic.
 
-    No round is lineage-cut, so plan depth (and Catalyst/AQE compile
-    time) grows linearly with ``iterations``; the API assumes a small
-    fixed count, as the registered queries use.
+    Each round reads the previous rank table once, so ranks are not cut
+    per round (the repeated outdeg/n_tbl subtrees canonicalize
+    identically, and ReuseExchange computes them once); ``bound`` caps
+    plan depth at large iteration counts.
     """
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    loop = Rounds()
+    edges = loop.cut(edges.select("src", "dst"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     # Scalar N rides along as a broadcast 1-row cross join — no action
     # on the driver, the plan stays lazy.
@@ -72,17 +78,8 @@ def pagerank(
     ranks = nodes.crossJoin(n_tbl).select(
         "node", _r9(F.lit(1.0) / F.col("n")).alias("r")
     )
-    # r13: NO per-round lineage cut. Each round consumes the previous
-    # rank table exactly ONCE (the contrib join), so the un-checkpointed
-    # plan grows LINEARLY with the small fixed iteration count — there is
-    # no subtree duplication for a cut to prevent — and the repeated
-    # outdeg/n_tbl subtrees canonicalize identically, so ReuseExchange
-    # computes them once at execution. Dropping the per-round
-    # localCheckpoint removes `iterations` semi-eager AQE materializations
-    # (one blocking driver sync + stage jobs per round at build time,
-    # profiled ~130-400 ms each on an idle local[32]) and lets the whole
-    # train execute as one pipelined DAG.
-    for _ in range(iterations):
+    for r in range(iterations):
+        ranks = loop.bound(r, ranks)
         contrib = (
             edges.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(outdeg, "src")
@@ -115,29 +112,22 @@ def bfs_distances(edges: DataFrame, seed: DataFrame, max_hops: int) -> DataFrame
 
     Scale: the textbook distributed frontier BFS — per hop, one
     edge⋈frontier shuffle join plus a distinct; the frontier and
-    visited tables are node-sized, never edge-sized, and a lazy
-    ``localCheckpoint`` of each hop's frontier cuts replayed lineage.
-    Hop count is a small constant, so the whole walk is one DAG."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    frontier = seed.select(
-        F.col("node").cast("bigint").alias("node"), F.lit(0).alias("dist")
-    ).localCheckpoint(eager=False)
-    # r13: only the FRONTIER is lineage-cut per hop (it is consumed twice
-    # — the visited union and the next hop's join — so an uncut plan
-    # would double per round). The visited set is kept as the lazy UNION
-    # of the already-checkpointed frontiers: the frontiers are disjoint
-    # by construction, so the union carries exactly the same bytes the
-    # old per-round visited checkpoint did, while dropping one semi-eager
-    # AQE materialization (a blocking driver sync, ~130-400 ms profiled)
-    # per hop.
+    visited tables are node-sized, never edge-sized. Each hop's frontier
+    is cut (the visited union and the next hop's join both read it);
+    ``visited`` is the lazy union of those disjoint cut frontiers."""
+    loop = Rounds()
+    edges = loop.cut(edges.select("src", "dst"))
+    frontier = loop.cut(
+        seed.select(F.col("node").cast("bigint").alias("node"), F.lit(0).alias("dist"))
+    )
     visited = frontier
     for h in range(1, max_hops + 1):
-        nxt = (
+        visited = loop.bound(h - 1, visited)
+        nxt = loop.cut(
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"), F.lit(h).alias("dist"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=False)
         )
         visited = visited.unionAll(nxt)
         frontier = nxt
@@ -163,13 +153,15 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
 
     Scale: per round, one combinable degree groupBy (map-side partial
     counts) and two node-keyed left-semi joins — state is edge-sized
-    and MONOTONICALLY SHRINKING, nothing ever reaches the driver, and
-    a lazy ``localCheckpoint`` of each round's edges cuts replayed
-    lineage, as the BFS/Bellman-Ford frontiers do. Round count is a
-    small fixed constant; the peel converges in few rounds on real
-    graphs because each sweep removes every currently-underweight node
-    at once (not one node at a time)."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    and MONOTONICALLY SHRINKING, nothing ever reaches the driver. Each
+    round's edges are cut: the profile row, the next degree aggregate
+    and the next semi-joins all read them. The per-round ``keep`` set
+    is not: its two semi-joins sit in one compiled plan, where
+    ReuseExchange computes the degree aggregate once. The peel
+    converges in few rounds on real graphs because each sweep removes
+    every currently-underweight node at once."""
+    loop = Rounds()
+    edges = loop.cut(edges.select("src", "dst"))
 
     def _profile(r: int, e: DataFrame) -> DataFrame:
         return e.agg(
@@ -182,16 +174,6 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
         )
 
     out = _profile(0, edges)
-    # r13: the per-round `keep` set is NOT checkpointed any more. It is
-    # consumed twice (src and dst semi-joins) inside ONE compiled plan —
-    # the round's edge checkpoint — where the two subtrees canonicalize
-    # identically, so ReuseExchange computes the degree aggregation once
-    # at execution. Cutting it separately bought nothing and cost one
-    # semi-eager AQE materialization (a blocking driver sync, profiled
-    # ~130-400 ms) per round. The EDGES stay checkpointed per round:
-    # they are consumed three times (profile row, next round's degree
-    # aggregate, next round's semi-joins), which an uncut plan would
-    # re-derive exponentially.
     for r in range(1, rounds + 1):
         keep = (
             edges.groupBy("src")
@@ -199,10 +181,9 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             .filter(F.col("d") >= k)
             .select("src")
         )
-        edges = (
+        edges = loop.cut(
             edges.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=False)
         )
         out = out.unionAll(_profile(r, edges))
     return out
@@ -221,29 +202,24 @@ def label_propagation(edges: DataFrame, iterations: int) -> DataFrame:
     Scale: per round, one edge⋈label shuffle join, one combinable
     (node, label) count, and one node-partitioned argmax window whose
     partitions are bounded by a node's DEGREE (never corpus-sized);
-    label state is node-sized. As in ``pagerank``, no round is
-    lineage-cut, so plan depth grows linearly with ``iterations``; the
-    API assumes a small fixed count. Density caveat: on a near-clique
+    label state is node-sized. As in ``pagerank``, each round reads the
+    previous labels once, so they are not cut per round; ``bound`` caps
+    plan depth at large round counts. Density caveat: on a near-clique
     graph synchronous LPA oscillates — use the REPEAT co-purchase graph
     (weight >= 2), where it settles into stable communities within a
     few rounds."""
     from pyspark.sql import Window
 
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    # r13: NO per-round lineage cut (same reasoning as pagerank): each
-    # round's label table is consumed exactly ONCE (the next round's
-    # edge⋈label join), so the uncut plan grows linearly with the small
-    # fixed round count — one join + one agg + one window per round —
-    # and the whole propagation executes as one pipelined DAG instead of
-    # paying a semi-eager AQE materialization (blocking driver sync,
-    # ~130-400 ms profiled) per round.
+    loop = Rounds()
+    edges = loop.cut(edges.select("src", "dst"))
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("lbl"))
     )
     w = Window.partitionBy("src").orderBy(F.desc("c"), "lbl")
-    for _ in range(iterations):
+    for r in range(iterations):
+        labels = loop.bound(r, labels)
         cnt = (
             edges.join(labels.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src", "lbl")
@@ -272,38 +248,26 @@ def sssp_distances(
     min, and one node-keyed improvement join — all state node-sized.
     Only nodes whose distance IMPROVED last round relax their out-edges
     (the frontier), so settled regions of a 100 TB graph stop paying
-    per-round cost; a lazy ``localCheckpoint`` of each round's frontier
-    cuts replayed lineage, as in ``bfs_distances``."""
-    edges = edges.select("src", "dst", "w").localCheckpoint(eager=False)
-    seed0 = seed.select(
-        F.col("node").cast("bigint").alias("node"),
-        F.lit(0).cast("bigint").alias("dist"),
-    ).localCheckpoint(eager=False)
+    per-round cost. The frontier (``improved``) is cut each round: the
+    improvements union, the next relax join and the next filter's
+    left_outer probe all read it. Every improvement is strictly smaller
+    than the node's previous distance, so the distance so far is the
+    min over the lazy union of the seed and every cut improvement."""
+    loop = Rounds()
+    edges = loop.cut(edges.select("src", "dst", "w"))
+    seed0 = loop.cut(
+        seed.select(
+            F.col("node").cast("bigint").alias("node"),
+            F.lit(0).cast("bigint").alias("dist"),
+        )
+    )
 
-    # r13: the per-round dist table is no longer materialized by an
-    # anti-join + union + lineage cut. Every improvement is strictly
-    # SMALLER than the node's previous distance, so the distance-so-far
-    # after round r is exactly min() over the seed and every checkpointed
-    # improvement table — a lazy union-aggregate over already-cut block
-    # scans, rebuilt per consumer and deduplicated by ReuseExchange when
-    # it appears twice in one compiled plan. Bytes are the same
-    # node-sized state the old anti-join shuffled once per round; what
-    # disappears is one semi-eager AQE materialization (blocking driver
-    # sync, ~130-400 ms profiled) per round. Only the FRONTIER
-    # (`improved`) keeps its per-round cut — it feeds three consumers
-    # (the min-union, the next round's relax join, and the filter's
-    # left_outer probe), which an uncut plan would re-derive
-    # exponentially.
-    improvements = [seed0]
-
-    def dist_so_far():
-        u = improvements[0]
-        for d in improvements[1:]:
-            u = u.unionByName(d)
+    def min_dist(u: DataFrame) -> DataFrame:
         return u.groupBy("node").agg(F.min("dist").alias("dist"))
 
-    frontier = seed0
-    for _ in range(rounds):
+    frontier = improvements = seed0
+    for r in range(rounds):
+        improvements = loop.bound(r, improvements)
         best = (
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(
@@ -313,15 +277,14 @@ def sssp_distances(
             .groupBy("node")
             .agg(F.min("cand").alias("cand"))
         )
-        improved = (
-            best.join(dist_so_far(), "node", "left_outer")
+        improved = loop.cut(
+            best.join(min_dist(improvements), "node", "left_outer")
             .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
             .select("node", F.col("cand").alias("dist"))
-            .localCheckpoint(eager=False)
         )
-        improvements.append(improved)
+        improvements = improvements.unionByName(improved)
         frontier = improved
-    return dist_so_far()
+    return min_dist(improvements)
 
 
 def hits_bipartite(
@@ -343,31 +306,23 @@ def hits_bipartite(
     Scale: per half-iteration, one edge⋈score shuffle join plus one
     combinable groupBy — the same node-sized-state flow as ``pagerank``
     above; the normalizing max rides along as a broadcast 1-row cross
-    join (no driver action), and lazy ``localCheckpoint`` per round
-    cuts replayed lineage."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    join (no driver action). Each half-step's RAW aggregate is the state
+    it replaces: it feeds both the max-norm broadcast and the normalized
+    projection, so it is the one table cut; the normalization stays a
+    lazy projection over its blocks."""
+    loop = Rounds()
+    edges = loop.cut(edges.select("src", "dst"))
     hubs = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.lit(1.0).alias("score"))
     )
-    # r13: the per-half-step lineage cut moved from the NORMALIZED score
-    # table to the RAW aggregate. The raw table is the half-step's only
-    # duplicated subtree (it feeds both the max-norm broadcast and the
-    # normalized projection), so cutting it is what actually prevents
-    # re-derivation; the normalization itself is a projection over the
-    # cut blocks plus a 1-row broadcast and stays lazy. Same number of
-    # cuts per half-step, but each cut's compile is one join + one
-    # combinable agg over block scans — and the initial all-ones hub
-    # table no longer pays its own materialization (it is consumed once,
-    # by the first half-step).
     auths = None
     for _ in range(iterations):
-        a_raw = (
+        a_raw = loop.replace(
             edges.join(hubs.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(_r9(F.col("score")).cast(_DEC)).alias("raw"))
-            .localCheckpoint(eager=False)
         )
         a_max = F.broadcast(a_raw.agg(F.max("raw").alias("mx")))
         auths = a_raw.crossJoin(a_max).select(
@@ -376,11 +331,10 @@ def hits_bipartite(
                 F.col("raw").cast("double") / F.col("mx").cast("double")
             ).alias("score"),
         )
-        h_raw = (
+        h_raw = loop.replace(
             edges.join(auths.withColumnRenamed("node", "dst"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum(_r9(F.col("score")).cast(_DEC)).alias("raw"))
-            .localCheckpoint(eager=False)
         )
         h_max = F.broadcast(h_raw.agg(F.max("raw").alias("mx")))
         hubs = h_raw.crossJoin(h_max).select(

@@ -51,6 +51,7 @@ from pipeline_query_engine_demo_spark.functions.vectors import (
     lit_vector,
     norm,
 )
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 
 
 def _centroid_scores(vec_col: str, cent: F.Column) -> F.Column:
@@ -657,7 +658,9 @@ def mmr_rerank(
     # top-k) re-executes once per consumer. It is n_queries x
     # n_candidates rows — checkpoint it (lazy, same pattern as
     # dedup.banded buckets).
-    cand_v = F.broadcast(cand).join(vecs, id_col).localCheckpoint(eager=False)
+    cand_v = resilient_local_checkpoint(
+        F.broadcast(cand).join(vecs, id_col), eager=False
+    )
     a = cand_v.select(
         "query_id",
         F.col(id_col).alias("i"),

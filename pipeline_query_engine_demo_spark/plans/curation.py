@@ -27,6 +27,7 @@ from pipeline_query_engine_demo_spark.functions.rounding import (
 )
 from pipeline_query_engine_demo_spark.functions.text import let
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 #: Span width (in whitespace tokens) for span-level exact dedup.
@@ -370,11 +371,11 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches don't each re-run the scan + centroid assignment.
     # dot/(na*nb) is the same IEEE expression the oracle's
     # dot/(sqrt(dot)*sqrt(dot)) evaluates, so rounding still matches.
-    vecs = (
+    vecs = resilient_local_checkpoint(
         emb.select("vec_id", "embedding")
         .join(cells, "vec_id")
-        .withColumn("_norm", norm("embedding"))
-        .localCheckpoint(eager=False)
+        .withColumn("_norm", norm("embedding")),
+        eager=False,
     )
     a = vecs.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"), "cell",

@@ -1303,8 +1303,8 @@ def lsh_bands_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_query_engine_demo_spark.operators import dedup as _d
 
     docs = _docs_fanned(spark, sf_dir)
-    sigs = _d.minhash_signatures(docs, "doc_id", "text").localCheckpoint(
-        eager=False
+    sigs = resilient_local_checkpoint(
+        _d.minhash_signatures(docs, "doc_id", "text"), eager=False
     )
     # r12 optimization (guide §2.4): all three banding chains verify
     # against the SAME corpus — materialize the shingle explode once
@@ -1324,21 +1324,24 @@ def lsh_bands_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file layout shares the full unit table.
     share_toks = fanout_width(spark, sf_dir, "documents") is not None
     toks = (
-        _d.unit_table(docs, "doc_id", "text").localCheckpoint(eager=False)
+        resilient_local_checkpoint(_d.unit_table(docs, "doc_id", "text"), eager=False)
         if share_toks
         else None
     )
     rows = []
     vers = []
     for b in _SWEEP_BANDS:
-        cand = _d.lsh_candidate_pairs(
-            docs,
-            "doc_id",
-            "text",
-            bands=b,
-            max_bucket_size=None,
-            signatures=sigs,
-        ).localCheckpoint(eager=False)
+        cand = resilient_local_checkpoint(
+            _d.lsh_candidate_pairs(
+                docs,
+                "doc_id",
+                "text",
+                bands=b,
+                max_bucket_size=None,
+                signatures=sigs,
+            ),
+            eager=False,
+        )
         estf = _d.signature_agreement_prefilter(
             sigs, cand, "doc_id", _d.DEFAULT_NUM_HASHES, _d.DEFAULT_EST_PREFILTER
         )
@@ -1347,10 +1350,10 @@ def lsh_bands_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             if share_toks
             else _d.jaccard_pairs(docs, estf, "doc_id", "text")
         )
-        ver = (
+        ver = resilient_local_checkpoint(
             verified.filter(F.col("jaccard") >= 0.6)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=False)
+            .select("id_a", "id_b"),
+            eager=False,
         )
         vers.append(ver)
         rows.append(

@@ -10,6 +10,7 @@ from pipeline_query_engine_demo_spark.functions.rounding import (
     sql_round_half_up,
 )
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import fanout_width, load_table
 
 
@@ -200,17 +201,19 @@ def _copurchase_triangles(spark: SparkSession, sf_dir: str):
        a shared index table; here each query stays self-contained so
        the bench measures full cost.
     """
-    pairs = (
+    pairs = resilient_local_checkpoint(
         _order_part_pairs(spark, sf_dir)
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-    ).localCheckpoint(eager=False)
-    deg = (
+        .distinct(),
+        eager=False,
+    )
+    deg = resilient_local_checkpoint(
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    ).localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("d")),
+        eager=False,
+    )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     with_deg = pairs.join(du, "u").join(dv, "v")
@@ -226,10 +229,13 @@ def _copurchase_triangles(spark: SparkSession, sf_dir: str):
     # 4.15 -> 4.54, lcc flat): the intersect stage is not the critical
     # path, the extra exchange + wider final stage is pure overhead in
     # the driver-bound build. Kept as-was.
-    oriented = with_deg.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).localCheckpoint(eager=False)
+    oriented = resilient_local_checkpoint(
+        with_deg.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+        ),
+        eager=False,
+    )
     adj = oriented.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
     )
@@ -378,7 +384,7 @@ def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     every triangle has exactly one lowest-ordered vertex in either
     ordering."""
     deg, tri_edges = _copurchase_triangles(spark, sf_dir)
-    tri_edges = tri_edges.localCheckpoint(eager=False)
+    tri_edges = resilient_local_checkpoint(tri_edges, eager=False)
     credit = (
         tri_edges.select(F.col("src").alias("node"), F.size("w").cast("bigint").alias("c"))
         .unionAll(
@@ -970,11 +976,11 @@ def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same owned-recall trade as the LSH hot-bucket cap. Global
     top-50 is orderBy+limit = TakeOrderedAndProject, no single-reducer
     sort."""
-    edges = (
+    edges = resilient_local_checkpoint(
         _order_part_pairs(spark, sf_dir)
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     sym = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))

@@ -39,6 +39,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 #: Scratch root for partitioned-layout replicas. Per-process so
@@ -584,7 +585,7 @@ def dpp_bloom_composed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        agg = (
+        agg = resilient_local_checkpoint(  # eager: joins under the held confs
             build_dpp_bloom_star(spark, sf_dir)
             .groupBy("l_returnflag")
             .agg(
@@ -596,7 +597,6 @@ def dpp_bloom_composed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 .alias("revenue"),
             )
-            .localCheckpoint()  # eager: joins under the held confs
         )
     finally:
         for k, v in prev.items():

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pipeline_query_engine_demo_spark.functions.rounding import round_half_up
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 
@@ -892,7 +893,7 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k, v in AQE_SKEW_CONFS.items():
         spark.conf.set(k, v)
     try:
-        agg = (
+        agg = resilient_local_checkpoint(  # eager: runs the join under the held confs
             build_aqe_skew_join(spark, sf_dir)
             .groupBy("c_mktsegment")
             .agg(
@@ -901,7 +902,6 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "cents"
                 ),
             )
-            .localCheckpoint()  # eager: runs the join under the held confs
         )
     finally:
         for k, v in prev.items():
@@ -973,7 +973,7 @@ def bloom_filter_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k, v in BLOOM_FILTER_CONFS.items():
         spark.conf.set(k, v)
     try:
-        agg = (
+        agg = resilient_local_checkpoint(  # eager: runs the join under the held confs
             build_bloom_filter_join(spark, sf_dir)
             .groupBy("l_returnflag")
             .agg(
@@ -985,7 +985,6 @@ def bloom_filter_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 .alias("revenue"),
             )
-            .localCheckpoint()  # eager: runs the join under the held confs
         )
     finally:
         for k, v in prev.items():

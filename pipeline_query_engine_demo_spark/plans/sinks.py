@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 #: Scratch root for sink round-trips. Unique per process so concurrent
@@ -439,7 +440,7 @@ def cbo_stats_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set(k, v)
     try:
         # eager localCheckpoint: the joins execute under the held confs
-        agg = spark.sql(_CBO_CROSS_PRONE_SQL).localCheckpoint()
+        agg = resilient_local_checkpoint(spark.sql(_CBO_CROSS_PRONE_SQL))
     finally:
         for k, v in prev.items():
             if v is None:
@@ -778,7 +779,7 @@ def python_stream_datasource_rollup(spark: SparkSession, sf_dir: str) -> DataFra
         # each start() re-creates the memory table, so snapshot the
         # cumulative complete-mode aggregate before the next (possibly
         # empty) pass replaces it.
-        result = spark.table("t_py_stream_src").localCheckpoint()
+        result = resilient_local_checkpoint(spark.table("t_py_stream_src"))
         # Early stop at the source's declared total (r11 verdict item
         # 4): the bounded feed's size IS its contract (the oracle
         # hardcodes range(STREAM_TOTAL)), so once every row has been
@@ -864,7 +865,7 @@ def python_parallel_stream_shards(spark: SparkSession, sf_dir: str) -> DataFrame
         p = q.lastProgress
         if p is None or p["numInputRows"] == 0:
             break  # drained: committed offset == latest
-        result = spark.table("t_py_shard_stream").localCheckpoint()
+        result = resilient_local_checkpoint(spark.table("t_py_shard_stream"))
         # Same early stop as the rollup twin: the feed's bounded total
         # is its contract, so skip the confirming empty pass.
         seen += p["numInputRows"]

@@ -45,6 +45,7 @@ from pipeline_query_engine_demo_spark.functions.rounding import (
 )
 from pipeline_query_engine_demo_spark.operators import dedup
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 #: Retained minimum hash values per sketch. 128 sits well below the
@@ -235,7 +236,9 @@ def theta_sketch_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the gate hash-compares every column raw. Accuracy vs the exact
     overlap is pinned in tests/test_sketches.py."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    sk = kmv_sketch(_source_shingle_hashes(docs)).localCheckpoint(eager=False)
+    sk = resilient_local_checkpoint(
+        kmv_sketch(_source_shingle_hashes(docs)), eager=False
+    )
     meta = _sketch_meta(sk)
     pairs = (
         meta.alias("a")
@@ -571,7 +574,9 @@ def theta_sketch_anotb_difference(spark: SparkSession, sf_dir: str) -> DataFrame
     legs run over broadcast k·|sources| rows — pair cost is
     sketch-sized, independent of corpus size."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    sk = kmv_sketch(_source_shingle_hashes(docs)).localCheckpoint(eager=False)
+    sk = resilient_local_checkpoint(
+        kmv_sketch(_source_shingle_hashes(docs)), eager=False
+    )
     meta = _sketch_meta(sk)
     pairs = (
         meta.alias("a")

@@ -10,6 +10,7 @@ from pipeline_query_engine_demo_spark.functions.rounding import (
     sql_round_half_up,
 )
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 
@@ -2622,11 +2623,11 @@ def two_step_transition_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # After .distinct() the (u, v) edge SET is bit-identical.
     from pipeline_query_engine_demo_spark.plans.graph import _order_part_pairs
 
-    edges = (
+    edges = resilient_local_checkpoint(
         _order_part_pairs(spark, sf_dir)
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     sym = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))

@@ -11,7 +11,9 @@ from pipeline_query_engine_demo_spark.functions.rounding import (
     sql_round_half_up,
 )
 from pipeline_query_engine_demo_spark.operators import dedup, similarity
+from pipeline_query_engine_demo_spark.operators.rounds import Rounds
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 
@@ -1251,8 +1253,8 @@ def rouge2_eval_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lazy checkpoint: cand feeds three consumers (the id semi-filter
     # and both overlap joins) — without the cut each would replay the
     # whole MinHash/banding chain (same rationale as near_dup_pairs).
-    cand = dedup.lsh_candidate_pairs(docs, "doc_id", "text").localCheckpoint(
-        eager=False
+    cand = resilient_local_checkpoint(
+        dedup.lsh_candidate_pairs(docs, "doc_id", "text"), eager=False
     )
     # Only candidate documents ever need bigrams: semi-filter before the
     # explode so the overlap joins shuffle candidate-doc bigrams, not the
@@ -1264,12 +1266,12 @@ def rouge2_eval_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bg also feeds three consumers (both overlap joins + sizes); cut its
     # lineage too so the semi-join + explode runs once.
-    bg = (
+    bg = resilient_local_checkpoint(
         docs.join(ids, "doc_id", "left_semi")
         .select(
             "doc_id", F.explode(F.array_distinct(text.shingles("text", 2))).alias("bg")
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     sizes = bg.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_bg"))
     inter = (
@@ -1981,10 +1983,12 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     every learning round then runs on the VOCABULARY (words x current
     symbols), orders of magnitude smaller than the corpus, with the
     argmax pair as a 1-row broadcast onto the vocab (no driver
-    round-trips — the whole 6-round train is one lazy DAG, lineage-cut
-    per round like the k-means/PageRank loops). Pair counting and the
-    merge application are pure JVM higher-order array expressions
-    (zip_with / aggregate fold), no Python workers.
+    round-trips — the whole 6-round train is one lazy DAG under the
+    ``operators.rounds`` loop policy; each round's vocab (read by the
+    pair count and the merge) and top pair (read by the merge and the
+    merge table) are cut). Pair counting and the merge application are
+    pure JVM higher-order array expressions (zip_with / aggregate fold),
+    no Python workers.
 
     The DuckDB oracle replays learning on a POSITIONAL representation
     with window-parity non-overlap resolution — an independently
@@ -1999,20 +2003,18 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wt"))
     )
-    vocab = words.select(
-        "word", "wt", F.split("word", "").alias("sym")
-    ).localCheckpoint(eager=False)
+    loop = Rounds()
+    vocab = loop.cut(words.select("word", "wt", F.split("word", "").alias("sym")))
     out = None
     for r in range(_BPE_ROUNDS):
         pairs = vocab.select(
             "wt", F.explode(F.expr(_BPE_PAIRS)).alias("p")
         ).select("wt", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        top = (
+        top = loop.cut(
             pairs.groupBy("a", "b")
             .agg(F.sum("wt").cast("bigint").alias("cnt"))
             .orderBy(F.desc("cnt"), "a", "b")
             .limit(1)
-            .localCheckpoint(eager=False)
         )
         row = top.select(
             F.lit(r).cast("bigint").alias("merge_round"),
@@ -2023,7 +2025,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = row if out is None else out.unionAll(row)
         if r < _BPE_ROUNDS - 1:
-            vocab = (
+            vocab = loop.cut(
                 vocab.crossJoin(
                     F.broadcast(
                         top.select(
@@ -2033,7 +2035,6 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .withColumn("sym", F.expr(_BPE_MERGE))
                 .drop("pa", "pb")
-                .localCheckpoint(eager=False)
             )
     return out.orderBy("merge_round")
 
@@ -3052,20 +3053,21 @@ def bigram_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     token can never strand the decode.
 
     Scale: the corpus reduces to the bigram count table once
-    (combinable, localCheckpointed); each of the 9 steps touches only
-    that table."""
+    (combinable, cut under the ``operators.rounds`` loop policy); each
+    of the 9 steps touches only that table, and each step's 1-row token
+    is cut (the next step and the output union both read it)."""
     from pipeline_query_engine_demo_spark.functions.text import shingles
 
     docs = load_table(spark, sf_dir, "documents")
     bg = docs.select(F.explode(shingles(F.col("text"), 2)).alias("bg"))
-    bigrams = (
+    loop = Rounds()
+    bigrams = loop.cut(
         bg.select(
             F.split(F.col("bg"), " ").getItem(0).alias("w1"),
             F.split(F.col("bg"), " ").getItem(1).alias("w2"),
         )
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
     )
     uni = bigrams.groupBy(F.col("w1").alias("token")).agg(
         F.sum("cnt").cast("bigint").alias("c")
@@ -3077,14 +3079,13 @@ def bigram_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     outs = [cur]
     for s in range(1, _DECODE_STEPS + 1):
-        cur = (
+        cur = loop.cut(
             bigrams.join(
                 F.broadcast(cur.select(F.col("token").alias("w1"))), "w1"
             )
             .orderBy(F.col("cnt").desc(), "w2")
             .limit(1)
             .select(F.lit(s).cast("bigint").alias("step"), F.col("w2").alias("token"))
-            .localCheckpoint(eager=False)
         )
         outs.append(cur)
     out = outs[0]

@@ -70,6 +70,22 @@ def test_extended_section_is_checked(tmp_path):
     assert _run(tmp_path, cur, prev).returncode == 1
 
 
+def test_regression_names_the_layer_that_moved(tmp_path):
+    layer = {"build_s": 1.0, "build_jobs": 10, "action_s": 0.5, "cpu_s": 0.4,
+             "shuffle_write_bytes": 1000}
+    prev = {"queries": {"q": 1.0, "r": 1.0}, "spread": {"q": [0.9, 1.2], "r": [1.0, 1.0]},
+            "layers": {"q": layer, "r": layer}}
+    cur = {"queries": {"q": 2.5, "r": 1.0},
+           "layers": {"q": dict(layer, build_jobs=20, build_s=1.6), "r": layer}}
+    r = _run(tmp_path, cur, prev)
+    assert r.returncode == 1
+    moved = [ln for ln in r.stdout.splitlines() if "moved most" in ln]
+    assert moved == [f"{'':36} moved most: build_jobs 10 -> 20"], r.stdout
+    # without layers on both sides the output is as before
+    del prev["layers"]
+    assert "moved most" not in _run(tmp_path, cur, prev).stdout
+
+
 def test_driver_wrapper_format_accepted(tmp_path):
     prev = {"parsed": {"queries": {"q": 1.0}, "spread": {"q": [1.0, 1.0]}}}
     cur = {"queries": {"q": 1.0}}

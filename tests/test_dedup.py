@@ -154,6 +154,37 @@ def test_contract_exact_adaptive_bypass_identity(spark):
     assert bypassed == uncontracted and len(bypassed) == 1
 
 
+def test_null_texts_are_not_clones(spark, monkeypatch):
+    # 20 unique texts plus 5 NULL texts: no document is a clone, so the
+    # default path must bypass contraction (neither of its two
+    # clone-group checkpoints is taken) and match the uncontracted
+    # pipeline exactly.
+    corpus = spark.createDataFrame(
+        [(i, f"{BASE} w{i} x{i}") for i in range(20)]
+        + [(100 + i, None) for i in range(5)],
+        "doc_id long, text string",
+    )
+    cuts = []
+    real = dedup.resilient_local_checkpoint
+
+    def spy(df, eager=True):
+        cuts.append(df.columns)
+        return real(df, eager=eager)
+
+    monkeypatch.setattr(dedup, "resilient_local_checkpoint", spy)
+    got = sorted(
+        tuple(r) for r in dedup.near_dup_pairs(corpus, "doc_id", "text", threshold=0.5).collect()
+    )
+    assert not [c for c in cuts if "_h" in c], cuts
+    want = sorted(
+        tuple(r)
+        for r in dedup.near_dup_pairs(
+            corpus, "doc_id", "text", threshold=0.5, contract_exact=False
+        ).collect()
+    )
+    assert got == want and got
+
+
 def test_connected_components_chain(spark):
     # chain 1-2-3-4 plus isolated 9: one component labeled 1, one {9}
     nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 9)], "doc_id long")

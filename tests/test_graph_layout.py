@@ -11,6 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from pipeline_query_engine_demo_spark.operators.graph import pagerank
+from pipeline_query_engine_demo_spark.operators.rounds import _CUT_EVERY
 from pipeline_query_engine_demo_spark.plans.analytics import (
     weighted_sample_docs,
     zorder_curve_events,
@@ -18,15 +19,23 @@ from pipeline_query_engine_demo_spark.plans.analytics import (
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 
+def _plan_lines(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().treeString().splitlines())
+
+
 def test_pagerank_mass_and_ordering(spark):
     """On a path graph a<->b<->c (symmetric), total rank mass stays ~1
-    and the center node outranks the leaves."""
+    and the center node outranks the leaves — also at 50 iterations,
+    where the plan is no larger than at 2 * _CUT_EVERY."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b")], "src string, dst string"
     )
-    ranks = {r.node: r.pagerank for r in pagerank(edges, iterations=10).collect()}
-    assert abs(sum(ranks.values()) - 1.0) < 1e-6, ranks
-    assert ranks["b"] > ranks["a"] == ranks["c"], ranks
+    for iterations in (10, 50):
+        df = pagerank(edges, iterations=iterations)
+        ranks = {r.node: r.pagerank for r in df.collect()}
+        assert abs(sum(ranks.values()) - 1.0) < 1e-6, (iterations, ranks)
+        assert ranks["b"] > ranks["a"] == ranks["c"], (iterations, ranks)
+    assert _plan_lines(df) <= _plan_lines(pagerank(edges, iterations=2 * _CUT_EVERY))
 
 
 def test_weighted_sample_keys_match_python(spark, sf_dir):
@@ -100,12 +109,14 @@ def test_sssp_bellman_ford_matches_python_and_differs_from_bfs(spark):
             dist = nd
         return dist
 
-    for rounds in (1, 2, 3, 4):
-        got = {
-            r["node"]: r["dist"]
-            for r in sssp_distances(edf, seed, rounds=rounds).collect()
-        }
+    for rounds in (1, 2, 3, 4, 50):
+        df = sssp_distances(edf, seed, rounds=rounds)
+        got = {r["node"]: r["dist"] for r in df.collect()}
         assert got == python_bf(rounds), f"rounds={rounds}"
+    # bounded plan at 50 rounds
+    assert _plan_lines(df) <= _plan_lines(
+        sssp_distances(edf, seed, rounds=2 * _CUT_EVERY)
+    )
     # the designed disagreement: BFS hop-distance of node 1 is 1, but
     # min COST path is the 3-edge detour
     assert python_bf(4)[1] == 3

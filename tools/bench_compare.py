@@ -17,6 +17,9 @@ Accepts either format for both files:
 A previous file without spreads (pre-r5) falls back to comparing
 against 1.5x the prior median. Queries present on only one side are
 reported but never fail the check (the corpus grows every round).
+When both files are bench.py detail records with per-query ``layers``,
+each REGRESSION row gets one more line naming the layer field that
+moved most (largest relative change).
 """
 
 from __future__ import annotations
@@ -33,6 +36,9 @@ FACTOR = 1.5
 #: absolute terms. Multi-second rows are unaffected (their 1.5x headroom
 #: already exceeds the floor).
 ABS_FLOOR = 0.25
+
+#: Per-query ``layers`` fields searched for the one that moved most.
+LAYER_FIELDS = ("build_s", "build_jobs", "action_s", "cpu_s", "shuffle_write_bytes")
 
 
 def load_payload(path: str) -> dict:
@@ -56,11 +62,26 @@ def flatten(p: dict) -> tuple[dict[str, float], dict[str, list[float]]]:
     return meds, spreads
 
 
+def moved_layer(cur: dict, prev: dict) -> str | None:
+    """``"field prev -> cur"`` for the layer field with the largest
+    relative change between two per-query layer records."""
+    best = None
+    for k in LAYER_FIELDS:
+        if k in cur and k in prev:
+            a, b = prev[k], cur[k]
+            rel = abs(b - a) / max(abs(a), 1e-9)
+            if best is None or rel > best[0]:
+                best = (rel, f"{k} {a} -> {b}")
+    return best and best[1]
+
+
 def main() -> None:
     if len(sys.argv) != 3:
         raise SystemExit(__doc__)
-    cur_meds, _ = flatten(load_payload(sys.argv[1]))
-    prev_meds, prev_spreads = flatten(load_payload(sys.argv[2]))
+    cur_p, prev_p = load_payload(sys.argv[1]), load_payload(sys.argv[2])
+    cur_meds, _ = flatten(cur_p)
+    prev_meds, prev_spreads = flatten(prev_p)
+    cur_layers, prev_layers = cur_p.get("layers", {}), prev_p.get("layers", {})
 
     regressions = []
     print(f"{'query':36} {'prev':>8} {'bound':>8} {'cur':>8}  verdict")
@@ -79,6 +100,10 @@ def main() -> None:
         )
         if not ok:
             regressions.append((name, prev, bound, cur))
+            if name in cur_layers and name in prev_layers:
+                moved = moved_layer(cur_layers[name], prev_layers[name])
+                if moved:
+                    print(f"{'':36} moved most: {moved}")
     for name in sorted(set(prev_meds) - set(cur_meds)):
         print(f"{name:36} {prev_meds[name]:8.3f} {'-':>8} {'-':>8}  DROPPED")
 
