@@ -39,7 +39,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pipeline_query_engine_demo_spark.plans.registry import query
-from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
+from pipeline_query_engine_demo_spark.session import held_confs, resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 #: Scratch root for partitioned-layout replicas. Per-process so
@@ -578,13 +578,10 @@ def dpp_bloom_composed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     months of DIRECTORIES are listed) AND a ``might_contain`` bloom
     filter above the scan (non-joining orderkeys die map-side before
     the shuffle) — directory pruning and row pruning stacked on the
-    same scan, pinned by tests/test_plans.py. The conf bracket holds
-    only while the eager localCheckpoint executes the join."""
-    confs = _composed_pruning_confs()
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    same scan, pinned by tests/test_plans.py. The confs are held
+    (``session.held_confs``) only while the eager localCheckpoint
+    executes the join."""
+    with held_confs(spark, _composed_pruning_confs()):
         agg = resilient_local_checkpoint(  # eager: joins under the held confs
             build_dpp_bloom_star(spark, sf_dir)
             .groupBy("l_returnflag")
@@ -598,10 +595,4 @@ def dpp_bloom_composed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("revenue"),
             )
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return agg.orderBy("l_returnflag")

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pipeline_query_engine_demo_spark.functions.rounding import round_half_up
 from pipeline_query_engine_demo_spark.plans.registry import query
-from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
+from pipeline_query_engine_demo_spark.session import held_confs, resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 
@@ -883,16 +883,13 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart of operators.joins.salted_join — same hot-key problem,
     zero hand salting: AQE reads the map-output statistics, sees one
     reduce partition ×19 the median, and splits it across tasks while
-    duplicating the matching build rows). The skew confs are held only
-    while the eager localCheckpoint EXECUTES the join — execution is
-    what AQE re-plans — then restored so the rest of the corpus runs on
-    the session defaults. tests/test_plans.py asserts the
-    SortMergeJoin(skew=true) plan shape at sf0.1 and result parity with
-    the manual salted join."""
-    prev = {k: spark.conf.get(k, None) for k in AQE_SKEW_CONFS}
-    for k, v in AQE_SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    duplicating the matching build rows). The skew confs are held
+    (``session.held_confs``) only while the eager localCheckpoint
+    EXECUTES the join — execution is what AQE re-plans — so the rest
+    of the corpus runs on the session defaults. tests/test_plans.py
+    asserts the SortMergeJoin(skew=true) plan shape at sf0.1 and result
+    parity with the manual salted join."""
+    with held_confs(spark, AQE_SKEW_CONFS):
         agg = resilient_local_checkpoint(  # eager: runs the join under the held confs
             build_aqe_skew_join(spark, sf_dir)
             .groupBy("c_mktsegment")
@@ -903,12 +900,6 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return agg.orderBy("c_mktsegment")
 
 
@@ -967,12 +958,9 @@ def bloom_filter_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the survivors' shuffle. False positives only cost wasted shuffle
     rows (the join re-checks equality), so the result is byte-identical
     to the plain join — which is exactly what the oracle asserts. The
-    confs are held only while the eager localCheckpoint EXECUTES the
-    join, then restored (the join_aqe_skew_split pattern)."""
-    prev = {k: spark.conf.get(k, None) for k in BLOOM_FILTER_CONFS}
-    for k, v in BLOOM_FILTER_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    confs are held (``session.held_confs``) only while the eager
+    localCheckpoint EXECUTES the join."""
+    with held_confs(spark, BLOOM_FILTER_CONFS):
         agg = resilient_local_checkpoint(  # eager: runs the join under the held confs
             build_bloom_filter_join(spark, sf_dir)
             .groupBy("l_returnflag")
@@ -986,12 +974,6 @@ def bloom_filter_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("revenue"),
             )
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return agg.orderBy("l_returnflag")
 
 
@@ -2697,8 +2679,8 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the variable holds a scalar on the driver; the data-sized
     work stays declarative inside the block's statements, so each
-    statement is its own optimized Catalyst plan."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
+    statement is its own optimized Catalyst plan. Scripting is on by
+    default since Spark 4.1, so the builder sets no conf."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("script_orders")
     return spark.sql(
         """

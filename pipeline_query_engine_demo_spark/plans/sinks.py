@@ -23,7 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pipeline_query_engine_demo_spark.plans.registry import query
-from pipeline_query_engine_demo_spark.session import resilient_local_checkpoint
+from pipeline_query_engine_demo_spark.session import held_confs, resilient_local_checkpoint
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 #: Scratch root for sink round-trips. Unique per process so concurrent
@@ -380,6 +380,13 @@ _CBO_CROSS_PRONE_SQL = """
 """
 
 
+#: Conf block cbo_stats_join_reorder holds while its joins execute.
+CBO_CONFS = {
+    "spark.sql.cbo.enabled": "true",
+    "spark.sql.cbo.joinReorder.enabled": "true",
+}
+
+
 @query(
     "cbo_stats_join_reorder",
     category="sink",
@@ -411,8 +418,9 @@ def cbo_stats_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the distinction that matters at scale, where a heavily compressed
     dimension looks small on disk but explodes in memory
     (tests/test_plans.py pins that the analyzed rowCount actually
-    reaches the optimized plan). The conf bracket holds only while the
-    eager localCheckpoint executes the join."""
+    reaches the optimized plan). The confs are held
+    (``session.held_confs``) only while the eager localCheckpoint
+    executes the join."""
     nation = load_table(spark, sf_dir, "nation")
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -431,22 +439,9 @@ def cbo_stats_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .saveAsTable(name)
         )
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
-    confs = {
-        "spark.sql.cbo.enabled": "true",
-        "spark.sql.cbo.joinReorder.enabled": "true",
-    }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with held_confs(spark, CBO_CONFS):
         # eager localCheckpoint: the joins execute under the held confs
         agg = resilient_local_checkpoint(spark.sql(_CBO_CROSS_PRONE_SQL))
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return agg.orderBy("n_name")
 
 
@@ -703,6 +698,66 @@ def python_datasource_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Pass cap of a bounded Python feed's drain. Both feeds stop at their
+#: declared total (3 passes and 1), so the cap only ends a misbehaving one.
+_FEED_MAX_PASSES = 16
+
+
+def _drain_bounded_feed(
+    agg: DataFrame, feed: str, table: str, ckpt_name: str, total: int
+) -> DataFrame:
+    """Drain the complete-mode aggregate ``agg`` of the bounded Python
+    stream ``feed`` (``total`` rows) into the memory table ``table``
+    and return the final snapshot.
+
+    A SimpleDataSourceStreamReader prefetches one offset range ahead, so
+    a single availableNow pass drains only the first range. Loop
+    availableNow runs against ONE checkpoint (offsets resume) until the
+    source reports no new input — the deterministic drain for a bounded
+    feed, and incidentally a live test of offset recovery. The
+    checkpoint is pid-unique (like _SCRATCH above): a fixed path would
+    let two concurrent harness runs share offsets — one run's rmtree or
+    already-committed ranges trips the other's drained-offset resume
+    into the "produced no batches" assert."""
+    import shutil
+
+    spark = agg.sparkSession
+    ckpt = os.path.join(tempfile.gettempdir(), f"{ckpt_name}_{os.getpid()}")
+    shutil.rmtree(ckpt, ignore_errors=True)
+    result = None
+    seen = 0
+    for _ in range(_FEED_MAX_PASSES):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(table)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        p = q.lastProgress
+        if p is None or p["numInputRows"] == 0:
+            break  # drained: the last snapshot is the final answer
+        # each start() re-creates the memory table, so snapshot the
+        # cumulative complete-mode aggregate before the next (possibly
+        # empty) pass replaces it.
+        result = resilient_local_checkpoint(spark.table(table))
+        # Early stop at the source's declared total: the bounded feed's
+        # size IS its contract (the oracles hardcode range(total)), so
+        # once every row has been ingested the confirming empty pass —
+        # a whole extra StreamingQuery launch, ~25% of the rollup row's
+        # wall — proves nothing new.
+        # Offset RESUME stays covered: the rollup's passes 2 and 3
+        # still restart from committed offsets on the same checkpoint.
+        seen += p["numInputRows"]
+        if seen >= total:
+            break
+    assert result is not None, f"{feed} produced no batches"
+    assert seen == total, f"{feed} delivered {seen} rows"
+    return result
+
+
 @query(
     "python_stream_datasource_rollup",
     category="streaming",
@@ -730,11 +785,10 @@ def python_stream_datasource_rollup(spark: SparkSession, sf_dir: str) -> DataFra
     python_parallel_stream_shards below; this row pins the offset/replay
     protocol that both share."""
     from pipeline_query_engine_demo_spark.sources.pydatasource import (
+        STREAM_TOTAL,
         CounterStreamSource,
         register_source,
     )
-
-    import shutil
 
     register_source(spark, CounterStreamSource)
     agg = (
@@ -746,52 +800,9 @@ def python_stream_datasource_rollup(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum("n").cast("bigint").alias("total"),
         )
     )
-    # A SimpleDataSourceStreamReader prefetches one offset range ahead,
-    # so a single availableNow pass drains only the first range. Loop
-    # availableNow runs against ONE checkpoint (offsets resume) until
-    # the source reports no new input — the deterministic drain for a
-    # bounded feed, and incidentally a live test of offset recovery.
-    # pid-unique (like _SCRATCH above): a fixed path would let two
-    # concurrent harness runs share offsets — one run's rmtree or
-    # already-committed ranges trips the other's drained-offset resume
-    # into the "produced no batches" assert.
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_pystream_ckpt_{os.getpid()}"
+    result = _drain_bounded_feed(
+        agg, "counter_feed", "t_py_stream_src", "spark_graft_pystream_ckpt", STREAM_TOTAL
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    from pipeline_query_engine_demo_spark.sources.pydatasource import STREAM_TOTAL
-
-    result = None
-    seen = 0
-    for _ in range(16):  # 100 rows / 40-row ranges => 3 passes
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("t_py_stream_src")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        p = q.lastProgress
-        if p is None or p["numInputRows"] == 0:
-            break  # drained: the last snapshot is the final answer
-        # each start() re-creates the memory table, so snapshot the
-        # cumulative complete-mode aggregate before the next (possibly
-        # empty) pass replaces it.
-        result = resilient_local_checkpoint(spark.table("t_py_stream_src"))
-        # Early stop at the source's declared total (r11 verdict item
-        # 4): the bounded feed's size IS its contract (the oracle
-        # hardcodes range(STREAM_TOTAL)), so once every row has been
-        # ingested the confirming empty pass — a whole extra
-        # StreamingQuery launch, ~25% of this row's wall — proves
-        # nothing new. Offset RESUME stays covered: passes 2 and 3
-        # still restart from committed offsets on the same checkpoint.
-        seen += p["numInputRows"]
-        if seen >= STREAM_TOTAL:
-            break
-    assert result is not None, "counter_feed produced no batches"
-    assert seen == STREAM_TOTAL, f"counter_feed delivered {seen} rows"
     return result.orderBy("grp")
 
 
@@ -828,11 +839,10 @@ def python_parallel_stream_shards(spark: SparkSession, sf_dir: str) -> DataFrame
     (python_stream_datasource_rollup) pins the offset/replay protocol;
     this row pins the parallel read path."""
     from pipeline_query_engine_demo_spark.sources.pydatasource import (
+        PAR_TOTAL,
         ShardStreamSource,
         register_source,
     )
-
-    import shutil
 
     register_source(spark, ShardStreamSource)
     agg = (
@@ -844,35 +854,9 @@ def python_parallel_stream_shards(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum("n").cast("bigint").alias("total"),
         )
     )
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_shardstream_ckpt_{os.getpid()}"
+    result = _drain_bounded_feed(
+        agg, "shard_feed", "t_py_shard_stream", "spark_graft_shardstream_ckpt", PAR_TOTAL
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    from pipeline_query_engine_demo_spark.sources.pydatasource import PAR_TOTAL
-
-    result = None
-    seen = 0
-    for _ in range(4):  # one full-range data batch
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("t_py_shard_stream")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        p = q.lastProgress
-        if p is None or p["numInputRows"] == 0:
-            break  # drained: committed offset == latest
-        result = resilient_local_checkpoint(spark.table("t_py_shard_stream"))
-        # Same early stop as the rollup twin: the feed's bounded total
-        # is its contract, so skip the confirming empty pass.
-        seen += p["numInputRows"]
-        if seen >= PAR_TOTAL:
-            break
-    assert result is not None, "shard_feed produced no batches"
-    assert seen == PAR_TOTAL, f"shard_feed delivered {seen} rows"
     return result.orderBy("shard")
 
 

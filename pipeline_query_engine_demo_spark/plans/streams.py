@@ -31,38 +31,6 @@ from pipeline_query_engine_demo_spark.plans.registry import query
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 
-def _tws_run(spark: SparkSession):
-    """Context manager for a transformWithStateInPandas drain: wires the
-    vendored protobuf runtime into the streaming Python workers and pins
-    RocksDBStateStoreProvider (the API's state server needs multiple
-    column families, which HDFSBacked lacks) for the duration, restoring
-    the prior provider afterwards so every other streaming query keeps
-    the default."""
-    from contextlib import contextmanager
-
-    from pipeline_query_engine_demo_spark.session import ensure_protobuf_on_workers
-
-    @contextmanager
-    def run():
-        ensure_protobuf_on_workers(spark)
-        rocksdb = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, rocksdb)
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return run()
-
-
 def _final_emission(df: DataFrame, key_cols: list[str], seq_col: str) -> DataFrame:
     """Collapse an update-mode memory-sink table to the LAST emission per
     key. Update mode appends one emission per key per micro-batch, so
@@ -245,27 +213,16 @@ def streaming_tws_user_value_totals(spark: SparkSession, sf_dir: str) -> DataFra
     streaming accumulation and DuckDB's SUM agree exactly.
 
     The API's state server requires multi-column-family stores, so the
-    run pins RocksDBStateStoreProvider (restored after the drain — the
-    HDFSBacked default stays for every other streaming query); the
-    protobuf wire dep is the vendored runtime (session._ensure_protobuf).
-    Multi-batch state evolution is tested in tests/test_streaming.py."""
-    from pipeline_query_engine_demo_spark.session import ensure_protobuf_on_workers
-
-    ensure_protobuf_on_workers(spark)  # vendored-runtime path for the workers
-    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, rocksdb)
-    try:
+    drain runs under ``streaming.tws_state_store``: the RocksDB provider
+    is held for the drain only (the HDFSBacked default stays for every
+    other streaming query) and the workers get the vendored protobuf
+    runtime (session._ensure_protobuf). Multi-batch state evolution is
+    tested in tests/test_streaming.py."""
+    with streaming.tws_state_store(spark):
         events = streaming.read_events_stream(spark, sf_dir)
         result = streaming.run_to_memory(
             streaming.tws_user_value_totals(events), "update", name="t_tws_totals"
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     # n_events strictly increases per emission, so the collapse keeps
     # exactly the final per-user snapshot even on a multi-batch drain.
     return _final_emission(result, ["user_id"], "n_events").orderBy("user_id")
@@ -1385,17 +1342,10 @@ def streaming_tws_recent_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ValueState totals query, covering the second state primitive
     of Spark 4's arbitrary-state API. AvailableNow drain → the final
     per-user list equals the batch top-3-recency window (the oracle's
-    QUALIFY form). RocksDB provider pinned per-run as the API
-    requires; multi-batch trim-carry is tested in
+    QUALIFY form). The drain runs under ``streaming.tws_state_store``
+    as the API requires; multi-batch trim-carry is tested in
     tests/test_streaming.py."""
-    from pipeline_query_engine_demo_spark.session import ensure_protobuf_on_workers
-
-    ensure_protobuf_on_workers(spark)
-    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, rocksdb)
-    try:
+    with streaming.tws_state_store(spark):
         events = streaming.read_events_stream(spark, sf_dir)
         rows = events.select(
             "user_id",
@@ -1406,11 +1356,6 @@ def streaming_tws_recent_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = streaming.run_to_memory(
             streaming.tws_user_recent_values(rows), "update", name="t_tws_recent"
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     # n_seen strictly increases per emission — keep the final per-user
     # snapshot (multi-batch-drain safety), then drop the bookkeeping.
     return (
@@ -1479,7 +1424,7 @@ def streaming_tws_session_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state per key is one 4-field struct + one timer regardless
     of stream length; timers are the eviction mechanism that bounds
     it. The oracle's window chain is per-user partitioned."""
-    with _tws_run(spark):
+    with streaming.tws_state_store(spark):
         events = streaming.read_events_stream(spark, sf_dir)
         rows = (
             events.withWatermark("ts", "0 seconds")
@@ -1521,7 +1466,7 @@ def streaming_tws_map_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user snapshot equals the batch GROUP BY; the update-mode sink
     is collapsed to the last emission per key via the strictly
     increasing ``n_seen`` counter (multi-batch-drain safety)."""
-    with _tws_run(spark):
+    with streaming.tws_state_store(spark):
         events = streaming.read_events_stream(spark, sf_dir)
         rows = events.select("user_id", "event_type")
         result = streaming.run_to_memory(
@@ -1592,7 +1537,7 @@ def streaming_tws_bootstrap_totals(spark: SparkSession, sf_dir: str) -> DataFram
     shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
     live_batch.coalesce(1).write.mode("overwrite").parquet(src)
-    with _tws_run(spark):
+    with streaming.tws_state_store(spark):
         stream = spark.readStream.schema("user_id long, cents long").parquet(src)
         result = streaming.run_to_memory(
             streaming.tws_bootstrap_totals(stream, hist.groupBy("user_id")),

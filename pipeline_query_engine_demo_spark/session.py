@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import os
 import sys
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -165,6 +167,32 @@ def resilient_local_checkpoint(df, eager: bool = True):
     from pyspark.storagelevel import StorageLevel
 
     return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK_2)
+
+
+@contextmanager
+def held_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Hold ``confs`` on ``spark`` for the ``with`` block, then put each
+    key's previous value back — or unset it when it had none — also when
+    the block raises.
+
+    Per-query settings live in the one shared session, so a conf a
+    builder leaves behind silently changes every later plan; this is
+    the only place that sets and restores one temporarily (the contract
+    of pyspark's ``SQLTestUtils.sql_conf``, minus the unittest mixin).
+    Hold it around the ACTION the confs must shape — an eager
+    checkpoint, a noop write, a streaming drain — since a lazy
+    DataFrame is planned when it executes, not when it is built."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "pipeline-query-engine-spark", **overrides: str) -> SparkSession:

@@ -14,6 +14,7 @@ equivalent batch SQL (stream-batch parity — DuckDB cannot run streams).
 """
 
 from pipeline_query_engine_demo_spark.streaming.windows import (
+    ROCKSDB_STATE_STORE,
     drain_with_flush,
     read_events_stream,
     staged_events_source,
@@ -37,10 +38,12 @@ from pipeline_query_engine_demo_spark.streaming.windows import (
     tws_bootstrap_totals,
     tws_map_counts,
     tws_session_timer,
+    tws_state_store,
     tws_user_value_totals,
 )
 
 __all__ = [
+    "ROCKSDB_STATE_STORE",
     "drain_with_flush",
     "read_events_stream",
     "staged_events_source",
@@ -64,5 +67,6 @@ __all__ = [
     "tws_bootstrap_totals",
     "tws_map_counts",
     "tws_session_timer",
+    "tws_state_store",
     "tws_user_value_totals",
 ]

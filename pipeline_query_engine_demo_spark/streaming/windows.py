@@ -24,10 +24,16 @@ import os
 import tempfile
 import uuid
 from collections.abc import Iterator
+from contextlib import contextmanager
 from typing import TYPE_CHECKING
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from pipeline_query_engine_demo_spark.session import (
+    ensure_protobuf_on_workers,
+    held_confs,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -349,6 +355,27 @@ def stream_stream_click_purchases(events: DataFrame) -> DataFrame:
     return clicks.join(purchases, cond, "inner").select("click_id", "purchase_id")
 
 
+#: The transformWithStateInPandas state server needs multiple column
+#: families per store, which only RocksDB provides (HDFSBacked raises
+#: STATE_STORE_MULTIPLE_COLUMN_FAMILIES).
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+}
+
+
+@contextmanager
+def tws_state_store(spark: SparkSession) -> Iterator[None]:
+    """Context for a transformWithStateInPandas drain: puts the vendored
+    protobuf runtime on the state-server workers' path and holds
+    :data:`ROCKSDB_STATE_STORE` for the block only, so every other
+    streaming query keeps the HDFSBacked default."""
+    ensure_protobuf_on_workers(spark)
+    with held_confs(spark, ROCKSDB_STATE_STORE):
+        yield
+
+
 def tws_user_value_totals(events: DataFrame) -> DataFrame:
     """Custom stateful operator on the NEW arbitrary-state API
     (``transformWithStateInPandas``, Spark 4): per-user running
@@ -363,9 +390,9 @@ def tws_user_value_totals(events: DataFrame) -> DataFrame:
     to a JVM state server that requires multiple column families, i.e.
     RocksDBStateStoreProvider (HDFSBacked raises
     STATE_STORE_MULTIPLE_COLUMN_FAMILIES). The protobuf runtime is the
-    vendored pure-python tree wired in session._ensure_protobuf; the
-    registered query (plans.streams.streaming_tws_user_value_totals)
-    sets the RocksDB provider for its run."""
+    vendored pure-python tree wired in session._ensure_protobuf; run
+    the drain under :func:`tws_state_store`, which holds the RocksDB
+    provider for it."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,

@@ -69,14 +69,11 @@ def test_shuffle_partitions_follow_session_cores(spark):
 
 
 def test_shuffle_partitions_override_wins(spark):
-    from pipeline_query_engine_demo_spark.session import get_spark
+    from pipeline_query_engine_demo_spark.session import get_spark, held_confs
 
     key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    try:
+    with held_confs(spark, {key: spark.conf.get(key)}):  # restores after the override
         assert get_spark("pytest", **{key: "7"}).conf.get(key) == "7"
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _mem_mib(value: str) -> int:

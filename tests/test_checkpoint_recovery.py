@@ -17,7 +17,9 @@ import shutil
 import pyspark.sql.functions as F
 
 from pipeline_query_engine_demo_spark import streaming
+from pipeline_query_engine_demo_spark.session import held_confs
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
+from pipeline_query_engine_demo_spark.streaming import ROCKSDB_STATE_STORE
 
 _SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -220,12 +222,7 @@ def test_rocksdb_state_store_provider_parity(spark, sf_dir, tmp_path):
         "overwrite"
     ).parquet(src)
     ckpt = str(tmp_path / "rdb_ckpt")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with held_confs(spark, ROCKSDB_STATE_STORE):
         stream = spark.readStream.schema(_SCHEMA).parquet(src)
         q = (
             stream.withWatermark("ts", "1 hour")
@@ -240,11 +237,6 @@ def test_rocksdb_state_store_provider_parity(spark, sf_dir, tmp_path):
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     got = spark.table("rdb_counts")
     expected = (

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from pipeline_query_engine_demo_spark import plans
+from pipeline_query_engine_demo_spark.session import held_confs
 
 
 def test_registry_shape():
@@ -141,28 +142,14 @@ def test_aqe_splits_skewed_join_partition(spark):
     split the hot partition (``skew=true`` in the executed plan)."""
     import pyspark.sql.functions as F
 
-    keys = (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.adaptive.forceOptimizeSkewedJoin",
-    )
-    saved = {}
-    for k in keys:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "100k"
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64k")
-        spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "100k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k",
+        "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+    }
+    with held_confs(spark, confs):
         # Payload must be incompressible and non-foldable: a constant
         # string constant-folds out of the shuffle entirely (observed:
         # the agg became sum(100) and the hot partition shrank below
@@ -181,12 +168,6 @@ def test_aqe_splits_skewed_join_partition(spark):
         assert row.s == 400_000 * 64  # every fact row matches exactly one dim row
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def _decoded_scan_rows(df) -> int:
@@ -410,14 +391,7 @@ def test_cbo_analyzed_rowcount_reaches_optimizer(spark, sf_dir):
     sinks.cbo_stats_join_reorder(spark, sf_dir)
     # build side effects done: the cbo_* tables exist and are analyzed
     true_n = spark.table("cbo_orders").count()
-    confs = {
-        "spark.sql.cbo.enabled": "true",
-        "spark.sql.cbo.joinReorder.enabled": "true",
-    }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with held_confs(spark, sinks.CBO_CONFS):
         stats = (
             spark.table("cbo_orders")
             ._jdf.queryExecution()
@@ -436,12 +410,6 @@ def test_cbo_analyzed_rowcount_reaches_optimizer(spark, sf_dir):
         )
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
@@ -453,10 +421,7 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
     predicate must sit on the fact's key, not the dim's."""
     from pipeline_query_engine_demo_spark.plans import relational
 
-    prev = {k: spark.conf.get(k, None) for k in relational.BLOOM_FILTER_CONFS}
-    for k, v in relational.BLOOM_FILTER_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with held_confs(spark, relational.BLOOM_FILTER_CONFS):
         df = (
             relational.build_bloom_filter_join(spark, sf_dir)
             .groupBy("l_returnflag")
@@ -464,12 +429,6 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
         )
         df.write.format("noop").mode("overwrite").save()
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "bloom_filter_agg(xxhash64(o_orderkey" in plan, plan
     assert "might_contain" in plan and "xxhash64(l_orderkey" in plan.split("might_contain")[1][:120], plan
 
@@ -483,11 +442,7 @@ def test_dpp_and_bloom_compose_on_one_scan(spark, sf_dir):
     reducers stacked, not merely coexisting in the corpus."""
     from pipeline_query_engine_demo_spark.plans import partitioned
 
-    confs = partitioned._composed_pruning_confs()
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with held_confs(spark, partitioned._composed_pruning_confs()):
         df = (
             partitioned.build_dpp_bloom_star(spark, sf_dir)
             .groupBy("l_returnflag")
@@ -495,12 +450,6 @@ def test_dpp_and_bloom_compose_on_one_scan(spark, sf_dir):
         )
         df.write.format("noop").mode("overwrite").save()
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     assert "dynamicpruningexpression(l_ship_month" in plan, plan
     assert "might_contain" in plan and "bloom_filter_agg(xxhash64(o_orderkey" in plan, plan
 
@@ -606,22 +555,13 @@ def test_join_aqe_skew_split_query_plan_and_salted_parity(spark):
     from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
     sf1 = "/root/testdata/sf0.1"
-    prev = {k: spark.conf.get(k, None) for k in AQE_SKEW_CONFS}
-    for k, v in AQE_SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with held_confs(spark, AQE_SKEW_CONFS):
         joined = build_aqe_skew_join(spark, sf1).select(
             "o_orderkey", "c_custkey", "c_mktsegment"
         )
         rows = joined.collect()
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan[:2000]
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     # parity with the manual salting strategy on the same inputs
     orders = load_table(spark, sf1, "orders")
     cust = load_table(spark, sf1, "customer")

@@ -239,13 +239,7 @@ def test_tws_state_evolves_across_time_split_batches(spark, sf_dir, tmp_path):
     for ch in [ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)]:
         ch.coalesce(1).write.mode("append").parquet(out)
         time.sleep(1.1)  # distinct file mtimes => deterministic batch order
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with streaming.tws_state_store(spark):
         stream = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
@@ -254,11 +248,6 @@ def test_tws_state_evolves_across_time_split_batches(spark, sf_dir, tmp_path):
         result = streaming.run_to_memory(
             streaming.tws_user_value_totals(stream), "update"
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     rows = result.collect()
     per_user: dict = {}
     for r in rows:
@@ -1114,13 +1103,7 @@ def test_tws_list_state_trims_across_batches(spark, sf_dir, tmp_path):
     for ch in [ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)]:
         ch.coalesce(1).write.mode("append").parquet(out)
         time.sleep(1.1)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with streaming.tws_state_store(spark):
         stream = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
@@ -1135,11 +1118,6 @@ def test_tws_list_state_trims_across_batches(spark, sf_dir, tmp_path):
         drained = streaming.run_to_memory(
             streaming.tws_user_recent_values(rows), "update"
         ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     # group emissions per user in arrival order; the FINAL emission per
     # user is the one whose newest event_id is globally newest for them
     from pyspark.sql import Window
@@ -1186,31 +1164,6 @@ def test_tws_list_state_trims_across_batches(spark, sf_dir, tmp_path):
         assert final[u][1] == s, (u, s, final[u])
 
 
-def _rocksdb(spark):
-    """Context manager pinning the RocksDB state store provider (the
-    transformWithState requirement) for a test block."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def run():
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return run()
-
-
 def test_tws_event_time_timers_multi_batch(spark, tmp_path):
     """Pins the event-time timer semantics streaming_tws_session_timer
     relies on, across a REAL two-batch run (maxFilesPerTrigger=1):
@@ -1244,7 +1197,7 @@ def test_tws_event_time_timers_multi_batch(spark, tmp_path):
             "user_id", F.col("ts_s").cast("timestamp").alias("ts")
         ).coalesce(1).write.mode("append").parquet(src)
         time.sleep(1.1)
-    with _rocksdb(spark):
+    with streaming.tws_state_store(spark):
         stream = (
             spark.readStream.schema("user_id long, ts timestamp")
             .option("maxFilesPerTrigger", 1)
@@ -1309,7 +1262,7 @@ def test_tws_map_state_merges_across_batches(spark, sf_dir, tmp_path):
     for ch in [ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)]:
         ch.coalesce(1).write.mode("append").parquet(out)
         time.sleep(1.1)
-    with _rocksdb(spark):
+    with streaming.tws_state_store(spark):
         stream = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
@@ -1391,7 +1344,7 @@ def test_tws_value_state_ttl_expires(spark, tmp_path):
                 [(1, delay)], "k long, delay_ms long"
             ).coalesce(1).write.mode("append").parquet(src)
             time.sleep(1.1)  # distinct mtimes => deterministic batch order
-        with _rocksdb(spark):
+        with streaming.tws_state_store(spark):
             stream = (
                 spark.readStream.schema("k long, delay_ms long")
                 .option("maxFilesPerTrigger", 1)
@@ -1450,7 +1403,7 @@ def test_tws_bootstrap_initial_state_edges(spark, tmp_path):
     spark.createDataFrame(
         [(1, 100), (2, 250)], "user_id long, cents long"
     ).coalesce(1).write.mode("overwrite").parquet(src)
-    with _rocksdb(spark):
+    with streaming.tws_state_store(spark):
         stream = spark.readStream.schema("user_id long, cents long").parquet(src)
         rows = st.run_to_memory(
             st.tws_bootstrap_totals(stream, hist.groupBy("user_id")), "update"
@@ -1542,10 +1495,7 @@ def test_tws_soak_state_plateaus_under_continuous_trigger(spark, tmp_path):
     soak_s = 45
     ckpt1 = str(tmp_path / "soak_sessions_ckpt")
     ckpt2 = str(tmp_path / "soak_map_ckpt")
-    from pipeline_query_engine_demo_spark.session import ensure_protobuf_on_workers
-
-    ensure_protobuf_on_workers(spark)
-    with _rocksdb(spark):
+    with streaming.tws_state_store(spark):
         rate = spark.readStream.format("rate").option("rowsPerSecond", 200).load()
         sess_rows = (
             rate.select(

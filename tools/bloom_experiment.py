@@ -35,7 +35,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 def main() -> None:
     from perfbench.tracing import RETENTION, Tracer
     from pipeline_query_engine_demo_spark.plans import relational
-    from pipeline_query_engine_demo_spark.session import get_spark
+    from pipeline_query_engine_demo_spark.session import get_spark, held_confs
 
     spark = get_spark("bloom-experiment", **RETENTION)
     spark.sparkContext.setLogLevel("ERROR")
@@ -66,10 +66,7 @@ def main() -> None:
     out: dict[str, dict] = {}
     results: dict[str, list] = {}
     for label, confs in variants.items():
-        prev = {k: spark.conf.get(k, None) for k in confs}
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        try:
+        with held_confs(spark, confs):
             df = agg()
             df.write.format("noop").mode("overwrite").save()  # warmup
             with tracer.span(f"action:{label}", "exec", label):
@@ -82,12 +79,6 @@ def main() -> None:
                 "wall_s": round(wall, 3),
                 "might_contain_in_plan": "might_contain" in plan,
             }
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
     layers = tracer.collect({})["queries"]
     for label in variants:
         out[label]["shuffle_write_bytes"] = layers[label]["shuffle_write_bytes"]

@@ -10,6 +10,10 @@
 set -o pipefail
 cd "$(dirname "$0")/.."
 export PYTHONPATH="$PWD"
+# One width for every step, the same as the tier-1 test command: the
+# shuffle-partition count follows it and changes AQE join choices, so a
+# manifest checked at another width can disagree with tests and bench.
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
 log() { echo "=== $(date -u +%H:%M:%S) $1"; }
 
 # Preserve the prior round's committed bench sidecar for the tripwire
@@ -31,23 +35,23 @@ assert d.get('scheduler', 'FIFO') == 'FIFO', f"baseline scheduler={d.get('schedu
 PY
 
 log "STEP 1: pytest"
-SPARK_GRAFT_CPUS=8 python -m pytest tests/ -q 2>&1 | grep -E "^FAILED|^ERROR|passed|failed" | tail -5
+python -m pytest tests/ -q 2>&1 | grep -E "^FAILED|^ERROR|passed|failed" | tail -5
 
 log "STEP 2: full sweep sf0.01 (+manifest check/write)"
-SPARK_GRAFT_CPUS=8 python tools/check_correctness.py /root/testdata/sf0.01 \
+python tools/check_correctness.py /root/testdata/sf0.01 \
   --manifest-check MANIFEST.json --manifest-write MANIFEST.json 2>&1 \
   | grep -E "^FAIL|ok, |DRIFT|missing|not in manifest|wrote"
 
 log "STEP 3: full sweep sf0.1 (+manifest check/write)"
-SPARK_GRAFT_CPUS=8 python tools/check_correctness.py /root/testdata/sf0.1 \
+python tools/check_correctness.py /root/testdata/sf0.1 \
   --manifest-check MANIFEST.json --manifest-write MANIFEST.json 2>&1 \
   | grep -E "^FAIL|ok, |DRIFT|missing|not in manifest|wrote"
 
 log "STEP 4: plan audit (regenerates PLANS.md)"
-SPARK_GRAFT_CPUS=8 python tools/audit_plans.py 2>&1 | tail -2
+python tools/audit_plans.py 2>&1 | tail -2
 
 log "STEP 5: oracle-mirror audit"
-SPARK_GRAFT_CPUS=8 python tools/audit_oracles.py 2>&1 | tail -3
+python tools/audit_oracles.py 2>&1 | tail -3
 
 log "STEP 6: decimal-cast audit"
 python tools/audit_decimal_casts.py 2>&1 | tail -2
@@ -63,8 +67,9 @@ python tools/bench_compare.py BENCH_DETAIL.json /tmp/bench_detail_prior.json 2>&
 
 log "STEP 10: vanilla driver-contract smoke"
 python - <<'PY'
+import os
 from pyspark.sql import SparkSession
-spark = SparkSession.builder.master('local[8]').config('spark.ui.enabled','false').getOrCreate()
+spark = SparkSession.builder.master(f"local[{os.environ['SPARK_GRAFT_CPUS']}]").config('spark.ui.enabled','false').getOrCreate()
 import __spark_entry__ as e
 print('entry rows:', e.entry(spark).count(), '| queries:', len(e.queries()), '| oracles:', len(e.oracle_sql()))
 spark.stop()
