@@ -11,11 +11,12 @@ every fixture table ships as a single unpartitioned Parquet file, so no
 plan in the corpus contained a PartitionFilters entry before this module
 (r11 verdict, "What's missing" #1).
 
-Layout fixtures are written once per (process, scale factor) into a
-scratch dir: the fact table is re-written ``partitionBy(<derived key>)``
-with a ``repartition(<key>)`` first, so each partition directory gets
-ONE file instead of tasks x partitions small files — the small-files
-bomb is the classic partitioned-write mistake at scale.
+Layout fixtures are ``session.replica_path`` replicas, written once per
+(process, scale factor): the fact table is re-written
+``partitionBy(<derived key>)`` with a ``repartition(<key>)`` first, so
+each partition directory gets ONE file instead of tasks x partitions
+small files — the small-files bomb is the classic partitioned-write
+mistake at scale.
 
 Why DPP matters at 100 TB: a static filter on the partition column
 prunes at PLAN time (PartitionFilters in the scan), but the common star
@@ -32,32 +33,25 @@ unpartitioned twin (SCALE.md).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pipeline_query_engine_demo_spark.plans.registry import query
-from pipeline_query_engine_demo_spark.session import held_confs, resilient_local_checkpoint
+from pipeline_query_engine_demo_spark.session import (
+    held_confs,
+    replica_path,
+    resilient_local_checkpoint,
+    scratch_path,
+)
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
-
-#: Scratch root for partitioned-layout replicas. Per-process so
-#: concurrent harness runs never collide; per-SF-label inside so one
-#: process can serve sf0.01 and sf0.1 sweeps from the same cache.
-_SCRATCH = os.path.join(tempfile.gettempdir(), f"spark_graft_partlayout_{os.getpid()}")
-
-
-def _replica_path(sf_dir: str, name: str) -> str:
-    return os.path.join(_SCRATCH, os.path.basename(os.path.normpath(sf_dir)), name)
 
 
 def lineitem_by_ship_month(spark: SparkSession, sf_dir: str) -> str:
     """lineitem re-laid-out as Parquet partitioned by ``l_ship_month``
-    (83 yyyy-MM values). Written once per process+SF; `_SUCCESS` is the
-    done marker (a crashed half-write lacks it and is rewritten)."""
-    path = _replica_path(sf_dir, "lineitem_by_ship_month")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    (83 yyyy-MM values). A ``session.replica_path`` replica: written
+    once per process+SF."""
+    path, ready = replica_path(sf_dir, "lineitem_by_ship_month")
+    if not ready:
         li = load_table(spark, sf_dir, "lineitem").withColumn(
             "l_ship_month", F.date_format("l_shipdate", "yyyy-MM")
         )
@@ -71,8 +65,8 @@ def lineitem_by_ship_month(spark: SparkSession, sf_dir: str) -> str:
 def events_by_day(spark: SparkSession, sf_dir: str) -> str:
     """events re-laid-out as Parquet partitioned by ``event_date``
     (30 daily partitions) — the canonical date-partitioned event log."""
-    path = _replica_path(sf_dir, "events_by_day")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    path, ready = replica_path(sf_dir, "events_by_day")
+    if not ready:
         ev = load_table(spark, sf_dir, "events").withColumn(
             "event_date", F.to_date("ts")
         )
@@ -87,9 +81,9 @@ def lineitem_clustered_by_orderkey(spark: SparkSession, sf_dir: str) -> str:
     ``repartitionByRange(16)`` gives each output file a disjoint key
     range and ``sortWithinPartitions`` keeps every row group (and page
     index) min/max tight — the single-column special case of
-    Z-order/liquid clustering. Written once per process+SF."""
-    path = _replica_path(sf_dir, "lineitem_clustered_orderkey")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    Z-order/liquid clustering. A ``session.replica_path`` replica."""
+    path, ready = replica_path(sf_dir, "lineitem_clustered_orderkey")
+    if not ready:
         li = load_table(spark, sf_dir, "lineitem")
         li.repartitionByRange(16, "l_orderkey").sortWithinPartitions(
             "l_orderkey"
@@ -146,14 +140,14 @@ def lineitem_orderkey_manifest(spark: SparkSession, sf_dir: str) -> str:
     """Per-file min/max manifest over the range-clustered lineitem
     layout (sources.manifest) — built in one distributed pass at
     "ingest" time, like Delta's add-file stats. Written once per
-    process+SF, keyed on the layout's own `_SUCCESS`-gated path."""
+    process+SF (``session.replica_path``)."""
     from pipeline_query_engine_demo_spark.sources.manifest import (
         write_file_manifest,
     )
 
     layout = lineitem_clustered_by_orderkey(spark, sf_dir)
-    mpath = _replica_path(sf_dir, "lineitem_orderkey_manifest")
-    if not os.path.exists(os.path.join(mpath, "_SUCCESS")):
+    mpath, ready = replica_path(sf_dir, "lineitem_orderkey_manifest")
+    if not ready:
         write_file_manifest(spark, layout, "l_orderkey", mpath)
     return mpath
 
@@ -259,7 +253,7 @@ def delete_cow_file_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched = [f for f in manifest_files(mpath) if f not in set(touched)]
     # Fresh rewrite dir per invocation: the op IS a write, and its cost
     # is proportional to the touched files only.
-    rewrite_dir = os.path.join(_SCRATCH, f"cow_rewrite_{_uuid.uuid4().hex[:12]}")
+    rewrite_dir = scratch_path(f"cow_rewrite_{_uuid.uuid4().hex[:12]}")
     (
         spark.read.parquet(*touched)
         .filter(~F.col("l_orderkey").between(lo, hi))
@@ -294,8 +288,8 @@ def events_hilbert_clustered(spark: SparkSession, sf_dir: str) -> str:
         _hilbert_stage_exprs,
     )
 
-    path = _replica_path(sf_dir, "events_hilbert_xy")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    path, ready = replica_path(sf_dir, "events_hilbert_xy")
+    if not ready:
         ev = load_table(spark, sf_dir, "events").selectExpr(
             "event_id",
             "event_type",

@@ -12,6 +12,7 @@ from pipeline_query_engine_demo_spark.functions.rounding import (
 )
 from pipeline_query_engine_demo_spark.operators import dedup, similarity
 from pipeline_query_engine_demo_spark.plans.registry import query
+from pipeline_query_engine_demo_spark.session import replica_path
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
 
@@ -320,7 +321,6 @@ def numpy_cosine_topk_prebucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     rows axis is paid once at ingest, not per query batch. Plan shape
     pinned by tests/test_plans.py; same oracle as the exact tier."""
     import os as _os
-    import tempfile as _tmp
 
     emb = load_table(spark, sf_dir, "embeddings")
     c = emb.select("vec_id", "embedding").withColumn(
@@ -328,12 +328,8 @@ def numpy_cosine_topk_prebucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     label = _os.path.basename(_os.path.normpath(sf_dir))
     table = f"b_embeddings_{label.replace('.', '_')}"
-    path = _os.path.join(
-        _tmp.gettempdir(), f"spark_graft_bucketed_emb_{_os.getpid()}", label
-    )
-    if not spark.catalog.tableExists(table) or not _os.path.exists(
-        _os.path.join(path, "_SUCCESS")
-    ):
+    path, ready = replica_path(sf_dir, "bucketed_emb")
+    if not spark.catalog.tableExists(table) or not ready:
         (
             c.write.mode("overwrite")
             .format("parquet")
@@ -367,15 +363,9 @@ def ivf_index_dpp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets and oracle as ivf_topk_embeddings (shared cell-assignment and
     probe expressions, operators.similarity.ivf_index_frame /
     ivf_probe_cells)."""
-    import os as _os
-    import tempfile as _tmp
-
     emb = load_table(spark, sf_dir, "embeddings")
-    label = _os.path.basename(_os.path.normpath(sf_dir))
-    path = _os.path.join(
-        _tmp.gettempdir(), f"spark_graft_ivf_index_{_os.getpid()}", label
-    )
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
+    path, ready = replica_path(sf_dir, "ivf_index")
+    if not ready:
         (
             similarity.ivf_index_frame(emb, "embedding", IVF_CENTROIDS)
             .repartition("_cell")

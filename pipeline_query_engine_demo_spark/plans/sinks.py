@@ -17,19 +17,17 @@ the shuffle carries one sketch per partition instead of the value set.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pipeline_query_engine_demo_spark.plans.registry import query
-from pipeline_query_engine_demo_spark.session import held_confs, resilient_local_checkpoint
+from pipeline_query_engine_demo_spark.session import (
+    held_confs,
+    resilient_local_checkpoint,
+    scratch_path,
+)
 from pipeline_query_engine_demo_spark.sources.catalog import load_table
-
-#: Scratch root for sink round-trips. Unique per process so concurrent
-#: harness runs never collide; files are tiny aggregates, never raw data.
-_SCRATCH = os.path.join(tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}")
-
 
 @query(
     "write_roundtrip_parquet",
@@ -56,7 +54,7 @@ def write_roundtrip_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
         )
     )
-    path = os.path.join(_SCRATCH, "roundtrip")
+    path = scratch_path("roundtrip")
     agg.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path).orderBy("returnflag", "linestatus")
 
@@ -84,7 +82,7 @@ def write_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    path = os.path.join(_SCRATCH, "partitioned")
+    path = scratch_path("partitioned")
     agg.write.mode("overwrite").partitionBy("orderstatus").parquet(path)
     return (
         spark.read.parquet(path)
@@ -114,7 +112,7 @@ def format_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV write + schema-declared read. CSV carries no types, so the
     reader gets an explicit schema — the only safe pattern at scale
     (inference costs an extra full scan and guesses)."""
-    path = os.path.join(_SCRATCH, "fmt_csv")
+    path = scratch_path("fmt_csv")
     _part_subset(spark, sf_dir).write.mode("overwrite").option("header", True).csv(path)
     return (
         spark.read.schema("partkey long, brand string, type string, size int")
@@ -128,7 +126,7 @@ def format_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def format_roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines write + schema-declared read (same scale rationale as
     CSV: explicit schema, no inference scan)."""
-    path = os.path.join(_SCRATCH, "fmt_json")
+    path = scratch_path("fmt_json")
     _part_subset(spark, sf_dir).write.mode("overwrite").json(path)
     return (
         spark.read.schema("partkey long, brand string, type string, size int")
@@ -147,7 +145,7 @@ def format_roundtrip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     source format — ingest for corpora that arrive as line-delimited
     text before any schema exists."""
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(_SCRATCH, "fmt_text")
+    path = scratch_path("fmt_text")
     docs.select("text").write.mode("overwrite").text(path)
     return spark.read.text(path).orderBy("value")
 
@@ -156,7 +154,7 @@ def format_roundtrip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def format_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC write + read — the other columnar format; types survive the
     round-trip natively (no schema declaration needed)."""
-    path = os.path.join(_SCRATCH, "fmt_orc")
+    path = scratch_path("fmt_orc")
     _part_subset(spark, sf_dir).write.mode("overwrite").orc(path)
     return spark.read.orc(path).orderBy("partkey")
 
@@ -167,7 +165,7 @@ def format_roundtrip_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     per record). Like CSV/JSON, XML carries no types, so the reader
     declares the schema up front — no inference scan. Covers the
     enterprise-feed ingest path (SURVEY §2.1 file formats)."""
-    path = os.path.join(_SCRATCH, "fmt_xml")
+    path = scratch_path("fmt_xml")
     _part_subset(spark, sf_dir).write.mode("overwrite").format("xml").option(
         "rowTag", "part"
     ).save(path)
@@ -200,7 +198,7 @@ def write_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. The oracle verifies losslessness; layout is observable in the
     files' row-group stats."""
     lineitem = load_table(spark, sf_dir, "lineitem")
-    path = os.path.join(_SCRATCH, "sorted_layout")
+    path = scratch_path("sorted_layout")
     (
         lineitem.filter(F.col("l_orderkey") <= 500)
         .select("l_orderkey", "l_linenumber", "l_quantity")
@@ -299,7 +297,7 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             .format("parquet")
             .bucketBy(8, key)
             .sortBy(key)
-            .option("path", os.path.join(_SCRATCH, name))
+            .option("path", scratch_path(name))
             .saveAsTable(name)
         )
     b_orders = spark.table("b_orders").hint("merge")
@@ -346,7 +344,7 @@ def bucket_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .bucketBy(16, "l_orderkey")
         .sortBy("l_orderkey")
-        .option("path", os.path.join(_SCRATCH, "b_lineitem_prune"))
+        .option("path", scratch_path("b_lineitem_prune"))
         .saveAsTable("b_lineitem_prune")
     )
     return (
@@ -435,7 +433,7 @@ def cbo_stats_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             df.write.mode("overwrite")
             .format("parquet")
-            .option("path", os.path.join(_SCRATCH, name))
+            .option("path", scratch_path(name))
             .saveAsTable(name)
         )
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
@@ -599,7 +597,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewriting history; merge cost is footer-only, data pages are
     untouched."""
     orders = load_table(spark, sf_dir, "orders")
-    base = os.path.join(_SCRATCH, "evolving")
+    base = scratch_path("evolving")
     (
         orders.filter(F.col("o_orderkey") <= 100)
         .select(F.col("o_orderkey").alias("orderkey"), F.col("o_totalprice").alias("totalprice"))
@@ -645,7 +643,7 @@ def csv_corrupt_records_permissive(spark: SparkSession, sf_dir: str) -> DataFram
     corrupt-record column AND the query must materialize non-corrupt
     columns too (Spark disallows referencing only the corrupt column)."""
     nation = load_table(spark, sf_dir, "nation")
-    path = os.path.join(_SCRATCH, "csv_corrupt")
+    path = scratch_path("csv_corrupt")
     good = nation.select(
         F.col("n_nationkey").cast("string").alias("c1"), F.col("n_name").alias("c2")
     )
@@ -703,9 +701,7 @@ def python_datasource_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FEED_MAX_PASSES = 16
 
 
-def _drain_bounded_feed(
-    agg: DataFrame, feed: str, table: str, ckpt_name: str, total: int
-) -> DataFrame:
+def _drain_bounded_feed(agg: DataFrame, feed: str, table: str, total: int) -> DataFrame:
     """Drain the complete-mode aggregate ``agg`` of the bounded Python
     stream ``feed`` (``total`` rows) into the memory table ``table``
     and return the final snapshot.
@@ -715,14 +711,11 @@ def _drain_bounded_feed(
     availableNow runs against ONE checkpoint (offsets resume) until the
     source reports no new input — the deterministic drain for a bounded
     feed, and incidentally a live test of offset recovery. The
-    checkpoint is pid-unique (like _SCRATCH above): a fixed path would
-    let two concurrent harness runs share offsets — one run's rmtree or
-    already-committed ranges trips the other's drained-offset resume
-    into the "produced no batches" assert."""
+    checkpoint is the per-process ``session.scratch_path`` ``table``."""
     import shutil
 
     spark = agg.sparkSession
-    ckpt = os.path.join(tempfile.gettempdir(), f"{ckpt_name}_{os.getpid()}")
+    ckpt = scratch_path(table)
     shutil.rmtree(ckpt, ignore_errors=True)
     result = None
     seen = 0
@@ -800,9 +793,7 @@ def python_stream_datasource_rollup(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum("n").cast("bigint").alias("total"),
         )
     )
-    result = _drain_bounded_feed(
-        agg, "counter_feed", "t_py_stream_src", "spark_graft_pystream_ckpt", STREAM_TOTAL
-    )
+    result = _drain_bounded_feed(agg, "counter_feed", "t_py_stream_src", STREAM_TOTAL)
     return result.orderBy("grp")
 
 
@@ -854,9 +845,7 @@ def python_parallel_stream_shards(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum("n").cast("bigint").alias("total"),
         )
     )
-    result = _drain_bounded_feed(
-        agg, "shard_feed", "t_py_shard_stream", "spark_graft_shardstream_ckpt", PAR_TOTAL
-    )
+    result = _drain_bounded_feed(agg, "shard_feed", "t_py_shard_stream", PAR_TOTAL)
     return result.orderBy("shard")
 
 
@@ -960,7 +949,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    frag_path = os.path.join(_SCRATCH, "fragmented")
+    frag_path = scratch_path("fragmented")
     agg.repartition(_COMPACT_BEFORE, "_bucket").write.mode("overwrite").partitionBy(
         "_bucket"
     ).parquet(frag_path)
@@ -968,7 +957,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     files_before = frag.select(
         F.countDistinct(F.col("_metadata.file_path")).alias("c")
     )
-    compact_path = os.path.join(_SCRATCH, "compacted")
+    compact_path = scratch_path("compacted")
     frag.repartition(_COMPACT_AFTER).write.mode("overwrite").parquet(compact_path)
     compacted = spark.read.parquet(compact_path)
     files_after = compacted.select(
@@ -1011,7 +1000,7 @@ def insert_with_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("defaults_src")
-    loc = os.path.join(_SCRATCH, "defaults_demo_tbl")
+    loc = scratch_path("defaults_demo_tbl")
     spark.sql("DROP TABLE IF EXISTS defaults_demo")
     # LOCATION makes the table external: DROP keeps the files, so a
     # repeated run (bench warmup + timed reps) would double the data —
@@ -1071,6 +1060,6 @@ def write_rebalanced_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .hint("rebalance", "orderstatus")
     )
-    path = os.path.join(_SCRATCH, "rebalanced")
+    path = scratch_path("rebalanced")
     sel.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path).orderBy("orderkey")

@@ -17,7 +17,6 @@ finer-grained state-evolution assertions (per-batch emission history).
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -28,7 +27,8 @@ from pipeline_query_engine_demo_spark.functions.rounding import (
     sql_round_half_up,
 )
 from pipeline_query_engine_demo_spark.plans.registry import query
-from pipeline_query_engine_demo_spark.sources.catalog import load_table
+from pipeline_query_engine_demo_spark.session import replica_path, scratch_path
+from pipeline_query_engine_demo_spark.sources.catalog import load_table, parquet_schema
 
 
 def _final_emission(df: DataFrame, key_cols: list[str], seq_col: str) -> DataFrame:
@@ -163,14 +163,13 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces its files instead of appending duplicates. The oracle
     checks the written files round-trip to the batch answer.
 
-    Scratch paths are stable per fixture dir and wiped at the start of
-    each run (bounded /tmp usage across repeated harness runs, instead
-    of a fresh uuid directory leaking per invocation)."""
+    Its ``session.scratch_path`` dirs, one per fixture dir, are wiped at
+    the start of each run, so repeated runs reuse them."""
     import hashlib
     import shutil
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"spark_graft_febs_{tag}")
+    out = scratch_path(f"febs_{tag}")
     shutil.rmtree(out, ignore_errors=True)
     shutil.rmtree(out + "_ckpt", ignore_errors=True)
     events = streaming.read_events_stream(spark, sf_dir)
@@ -351,7 +350,7 @@ def _embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_query_engine_demo_spark.streaming.windows import _stream_source_dir
 
     d = _stream_source_dir(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(sf_dir, "embeddings.parquet"))
     return spark.readStream.schema(schema).parquet(d)
 
 
@@ -842,7 +841,7 @@ def streaming_kmv_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     d = _stream_source_dir(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(sf_dir, "documents.parquet"))
     docs = spark.readStream.schema(schema).parquet(d)
     rows = docs.select(
         "source",
@@ -899,7 +898,7 @@ def streaming_hll_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     d = _stream_source_dir(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(sf_dir, "documents.parquet"))
     docs = spark.readStream.schema(schema).parquet(d)
     rows = docs.select(
         "source",
@@ -985,7 +984,7 @@ def streaming_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _stream_source_dir(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(sf_dir, "documents.parquet"))
     docs = spark.readStream.schema(schema).parquet(d)
     salts = [f"cms{j}" for j in range(_analytics._CMS_D)]
     toks = docs.select(
@@ -1106,7 +1105,7 @@ def streaming_quantile_sketch_by_status(
     )
 
     d = _stream_source_dir(sf_dir, "orders.parquet")
-    schema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(sf_dir, "orders.parquet"))
     orders = spark.readStream.schema(schema).parquet(d)
     rows = orders.select(
         _F.col("o_orderstatus").alias("grp"),
@@ -1531,9 +1530,7 @@ def streaming_tws_bootstrap_totals(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     live_batch = ev.filter(F.col("ts") >= cutoff).select("user_id", cents)
-    root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_tws_boot_{os.getpid()}"
-    )
+    root = scratch_path("tws_boot")
     shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
     live_batch.coalesce(1).write.mode("overwrite").parquet(src)
@@ -1574,9 +1571,7 @@ def statestore_offline_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     32-task parallel scan, not a driver walk."""
     import shutil
 
-    root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ss_read_{os.getpid()}"
-    )
+    root = scratch_path("ss_read")
     shutil.rmtree(root, ignore_errors=True)
     ckpt = os.path.join(root, "ckpt")
     agg = (
@@ -1657,9 +1652,7 @@ def statestore_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     cutoff = F.lit(_BOOTSTRAP_CUTOFF).cast("timestamp")
-    root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ss_cf_{os.getpid()}"
-    )
+    root = scratch_path("ss_cf")
     shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
     ckpt = os.path.join(root, "ckpt")
@@ -1727,29 +1720,20 @@ def statestore_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # change ever collapses the drain back to one batch.
 # ---------------------------------------------------------------------------
 
-_CHUNK_SCRATCH = os.path.join(
-    tempfile.gettempdir(), f"spark_graft_stream_chunks_{os.getpid()}"
-)
-
-
 def _chunked_events_stream(
     spark: SparkSession, sf_dir: str, n_chunks: int = 4
 ) -> DataFrame:
     """File-source events stream that admits ONE file per micro-batch
-    over an ``n_chunks``-file re-chunked copy of the fixture (written
-    once per process+SF, `_SUCCESS` as the done marker). ts is
+    over an ``n_chunks``-file re-chunked copy of the fixture (a
+    ``session.replica_path`` replica, written once per process+SF). ts is
     normalized BEFORE the write, so the stream schema is read from the
     chunked files' own footer — no physical-type guessing."""
-    out = os.path.join(
-        _CHUNK_SCRATCH,
-        os.path.basename(os.path.normpath(sf_dir)),
-        f"events_{n_chunks}",
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    out, ready = replica_path(sf_dir, f"events_{n_chunks}")
+    if not ready:
         load_table(spark, sf_dir, "events").repartition(n_chunks).write.mode(
             "overwrite"
         ).parquet(out)
-    schema = spark.read.parquet(out).schema
+    schema = parquet_schema(spark, out)
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1876,16 +1860,12 @@ def streaming_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pipeline_query_engine_demo_spark.operators import similarity
     from pipeline_query_engine_demo_spark.plans.llm import IVF_CENTROIDS
 
-    chunks = os.path.join(
-        _CHUNK_SCRATCH,
-        os.path.basename(os.path.normpath(sf_dir)),
-        "embeddings_4",
-    )
-    if not os.path.exists(os.path.join(chunks, "_SUCCESS")):
+    chunks, ready = replica_path(sf_dir, "embeddings_4")
+    if not ready:
         load_table(spark, sf_dir, "embeddings").repartition(4).write.mode(
             "overwrite"
         ).parquet(chunks)
-    schema = spark.read.parquet(chunks).schema
+    schema = parquet_schema(spark, chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1893,9 +1873,7 @@ def streaming_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Fresh index dir per invocation: foreachBatch APPENDS, so reusing
     # a dir across runs in one process would double the index.
-    index_dir = os.path.join(
-        _CHUNK_SCRATCH, f"ivf_index_{_uuid.uuid4().hex[:12]}"
-    )
+    index_dir = scratch_path(f"ivf_index_{_uuid.uuid4().hex[:12]}")
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         similarity.ivf_index_frame(batch_df, "embedding", IVF_CENTROIDS).select(
@@ -1951,9 +1929,7 @@ def streaming_restart_resume_user_totals(
     import uuid as _uuid
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    scratch = os.path.join(
-        _CHUNK_SCRATCH, f"restart_{_uuid.uuid4().hex[:12]}"
-    )
+    scratch = scratch_path(f"restart_{_uuid.uuid4().hex[:12]}")
     src = os.path.join(scratch, "src")
     ckpt = os.path.join(scratch, "ckpt")
     name = "t_restart_resume"

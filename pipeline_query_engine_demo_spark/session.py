@@ -19,8 +19,12 @@ for the 100 TB design point:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
+import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -193,6 +197,39 @@ def held_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+_scratch_lock = threading.Lock()
+_scratch_root: str | None = None  # made by this pid; a forked child makes its own
+
+
+def _remove_scratch_root(root: str, owner_pid: int) -> None:
+    if os.getpid() == owner_pid:  # a forked child inherits atexit hooks
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_path(*parts: str) -> str:
+    """Path under this process's one scratch root,
+    ``<tempfile.gettempdir()>/spark_graft_<pid>``, which holds every file
+    a query writes for itself. The root is made on first use (never on
+    import) and removed at interpreter exit by the pid that made it, so
+    concurrent runs never share a path and nothing outlives the process."""
+    global _scratch_root
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{os.getpid()}")
+    with _scratch_lock:
+        if _scratch_root != root:
+            os.makedirs(root, exist_ok=True)
+            atexit.register(_remove_scratch_root, root, os.getpid())
+            _scratch_root = root
+    return os.path.join(root, *parts)
+
+
+def replica_path(sf_dir: str, name: str) -> tuple[str, bool]:
+    """``(path, ready)`` of the write-once replica ``name`` of fixture
+    ``sf_dir``, one per process and SF label. ``ready`` once a write
+    completed and left ``_SUCCESS``; a crashed half-write is redone."""
+    path = scratch_path(os.path.basename(os.path.normpath(sf_dir)), name)
+    return path, os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def get_spark(app_name: str = "pipeline-query-engine-spark", **overrides: str) -> SparkSession:

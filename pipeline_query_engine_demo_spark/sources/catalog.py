@@ -139,6 +139,18 @@ def fanout_width(spark: SparkSession, sf_dir: str, *names: str) -> int | None:
     return width if units * 2 <= width else None
 
 
+def parquet_schema(spark: SparkSession, path: str):
+    """Schema of the Parquet file or directory ``path``, one inference
+    job per ``_cache_key`` per process (``_SCHEMA_CACHE``). Callers
+    reading ``events`` set ``nanosAsLong`` first: ``ts``'s type hangs on it."""
+    key = _cache_key(path)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        _SCHEMA_CACHE[key] = schema
+    return schema
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False
 ) -> DataFrame:
@@ -169,15 +181,7 @@ def load_table(
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = _cache_key(path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        # One inference job per (path, mtime, size) per process; every
-        # later build reads the cached StructType and skips the footer
-        # job entirely. The stat-based key (r12 ADVICE) means a
-        # regenerated fixture misses instead of serving a stale schema.
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
+    schema = parquet_schema(spark, path)
     df = spark.read.schema(schema).parquet(path)
     dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
     if name == "events" and dtypes.get("ts") == "bigint":

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -33,7 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pipeline_query_engine_demo_spark.session import (
     ensure_protobuf_on_workers,
     held_confs,
+    scratch_path,
 )
+from pipeline_query_engine_demo_spark.sources.catalog import parquet_schema
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -43,15 +44,15 @@ def _stream_source_dir(sf_dir: str, table_file: str = "events.parquet") -> str:
     """The file stream source requires a directory; the fixture is a
     single file. Build (idempotently) a scratch dir holding a symlink to
     the fixture Parquet — no data is copied, and each (fixture dir,
-    table) pair gets its own stable scratch path. Shared by the events
-    stream here and the embeddings ingest stream (plans.streams) so the
-    lexists/absolute-target/race invariants live in ONE place."""
+    table) pair gets its own ``session.scratch_path``. Shared by the
+    events stream here and the embeddings ingest stream (plans.streams)
+    so the lexists/absolute-target/race invariants live in ONE place."""
     tag = hashlib.md5(f"{sf_dir}|{table_file}".encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_{tag}")
+    d = scratch_path(f"stream_{tag}")
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, table_file)
     # lexists (not exists): a dangling link must not trigger re-creation;
-    # the except guards the create-create race between concurrent runs.
+    # the except guards the create-create race between concurrent builds.
     if not os.path.lexists(link):
         try:
             # absolute target: a relative sf_dir would otherwise resolve
@@ -63,12 +64,12 @@ def _stream_source_dir(sf_dir: str, table_file: str = "events.parquet") -> str:
 
 
 def _events_schema_and_ts_type(spark: SparkSession, sf_dir: str):
-    """One-time batch footer read of the events fixture (metadata only)
-    — streams cannot infer schemas, and the fixture has shipped with
-    two ``ts`` physical types, so the declared schema must track the
-    actual generation instead of hard-coding one."""
+    """Batch footer read of the events fixture (metadata only, cached by
+    ``catalog.parquet_schema``) — streams cannot infer schemas, and the
+    fixture has shipped with two ``ts`` physical types, so the declared
+    schema must track the actual generation instead of hard-coding one."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = {f.name: f.dataType.simpleString() for f in raw_schema}["ts"]
     return raw_schema, ts_type
 
@@ -107,8 +108,8 @@ def staged_events_source(spark: SparkSession, sf_dir: str, tag: str):
     The watermark-advancing flush mechanism (see the stream-stream
     outer joins) appends dummy far-future rows to its source dir; that
     must never pollute the shared ``read_events_stream`` directory, so
-    each caller gets its own scratch root keyed by (sf_dir, tag),
-    recreated fresh per run.
+    each caller gets its own ``session.scratch_path`` keyed by
+    (sf_dir, tag), recreated fresh per run.
 
     Returns ``(events, append_flush_rows, root)``:
 
@@ -121,7 +122,7 @@ def staged_events_source(spark: SparkSession, sf_dir: str, tag: str):
     import shutil
 
     h = hashlib.md5(f"{sf_dir}|{tag}".encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}_{h}")
+    root = scratch_path(f"{tag}_{h}")
     shutil.rmtree(root, ignore_errors=True)
     srcdir = os.path.join(root, "src")
     os.makedirs(srcdir)

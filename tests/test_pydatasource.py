@@ -3,9 +3,6 @@ streaming offset progression across restarts (checkpointed state)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pipeline_query_engine_demo_spark.sources.pydatasource import (
     STREAM_TOTAL as TOTAL,
     CounterStreamSource,
@@ -29,7 +26,7 @@ def test_batch_source_reads_all_partitions_in_parallel(spark):
     assert all(r.n_squared == r.n * r.n for r in rows)
 
 
-def test_stream_source_resumes_offsets_across_restarts(spark):
+def test_stream_source_resumes_offsets_across_restarts(spark, tmp_path):
     """Each availableNow run drains the reader's next prefetched batch;
     the checkpoint carries both the source offset and the aggregation
     state, so three restarts accumulate the full 100-row feed into the
@@ -39,7 +36,7 @@ def test_stream_source_resumes_offsets_across_restarts(spark):
         spark.dataSource.register(CounterStreamSource)
     except Exception:
         pass
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="pyds_ckpt_"), "c1")
+    ckpt = str(tmp_path / "c1")
 
     def run_once(name: str):
         agg = (
@@ -93,15 +90,12 @@ def test_counter_stream_source_drains_all_offsets(spark, sf_dir):
     assert a == b and len(a) == 40 and a[0] == (40, 0)
 
 
-def test_parallel_stream_reader_fans_out_partitions(spark):
+def test_parallel_stream_reader_fans_out_partitions(spark, tmp_path):
     """The DataSourceStreamReader variant must deliver a micro-batch
     through MULTIPLE physical partitions (executor-side reads), not a
     driver funnel: spark_partition_id() observed BEFORE any shuffle must
     show one partition per planned shard, and each shard's rows must be
     exactly its slice."""
-    import shutil
-    import tempfile as tf
-
     from pipeline_query_engine_demo_spark.sources.pydatasource import (
         PAR_SHARD_ROWS,
         PAR_TOTAL,
@@ -113,8 +107,7 @@ def test_parallel_stream_reader_fans_out_partitions(spark):
         spark.dataSource.register(ShardStreamSource)
     except Exception:
         pass
-    ckpt = os.path.join(tf.mkdtemp(prefix="pyds_shard_"), "c1")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = str(tmp_path / "c1")
     tagged = (
         spark.readStream.format("shard_feed")
         .load()
@@ -149,15 +142,12 @@ def test_parallel_stream_reader_fans_out_partitions(spark):
         )
 
 
-def test_parallel_stream_reader_replay_is_deterministic(spark):
+def test_parallel_stream_reader_replay_is_deterministic(spark, tmp_path):
     """Recovery contract: re-splitting the same offset range yields the
     identical shard slices, and re-reading a shard yields identical
     rows — the partitions()-based equivalent of readBetweenOffsets. A
     second drain over the committed checkpoint must also plan ZERO new
     rows (offset resume)."""
-    import shutil
-    import tempfile as tf
-
     from pipeline_query_engine_demo_spark.sources.pydatasource import (
         ShardStreamReader,
         ShardStreamSource,
@@ -177,8 +167,7 @@ def test_parallel_stream_reader_replay_is_deterministic(spark):
         spark.dataSource.register(ShardStreamSource)
     except Exception:
         pass
-    ckpt = os.path.join(tf.mkdtemp(prefix="pyds_shard_"), "c2")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = str(tmp_path / "c2")
 
     def drain(name):
         # complete-mode aggregate: append-mode memory sinks cannot

@@ -1,0 +1,85 @@
+"""One scratch root: every file a query writes for itself goes under
+``session.scratch_path``'s per-process directory, and nothing of it
+outlives the process."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import textwrap
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PACKAGE = os.path.join(_REPO, "pipeline_query_engine_demo_spark")
+
+#: Builders that write scratch: a sink round-trip, a foreachBatch sink
+#: and its checkpoint, the shared stream source dir, two partitioned
+#: replicas plus a per-invocation rewrite dir, and a bucketed table.
+_WRITERS = [
+    "write_rebalanced_parquet",
+    "streaming_foreach_batch_sink",
+    "streaming_tumbling_window_counts",
+    "delete_cow_file_rewrite",
+    "numpy_cosine_topk_prebucketed",
+]
+
+
+def _scratch_roots(tmp_dir) -> list[str]:
+    return sorted(e for e in os.listdir(tmp_dir) if e.startswith("spark_graft_"))
+
+
+def test_one_scratch_root_per_process_removed_at_exit(tmp_path, sf_dir):
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {_REPO!r})
+        from pipeline_query_engine_demo_spark import plans
+        from pipeline_query_engine_demo_spark.session import get_spark
+        spark = get_spark("scratch-test")
+        for name in {_WRITERS!r}:
+            plans.queries()[name](spark, {sf_dir!r}).write.format(
+                "noop"
+            ).mode("overwrite").save()
+        print("BUILT", flush=True)
+        sys.stdin.readline()
+        """
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path), "SPARK_GRAFT_CPUS": "2"}
+    child = subprocess.Popen(
+        [sys.executable, "-c", script],
+        env=env,
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        line = child.stdout.readline()
+        if line.strip() != "BUILT":
+            child.kill()
+            raise AssertionError(child.communicate(timeout=60)[1][-3000:])
+        assert _scratch_roots(tmp_path) == [f"spark_graft_{child.pid}"]
+        _, err = child.communicate("\n", timeout=300)
+    finally:
+        if child.poll() is None:
+            child.kill()
+            child.wait(timeout=60)
+    assert child.returncode == 0, err[-3000:]
+    assert _scratch_roots(tmp_path) == []
+
+
+def test_only_session_names_the_scratch_root():
+    offenders = []
+    for dirpath, _, files in os.walk(_PACKAGE):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == os.path.join(_PACKAGE, "session.py"):
+                continue
+            with open(path) as fh:
+                text = fh.read()
+            offenders += [
+                f"{os.path.relpath(path, _REPO)}: {word}"
+                for word in ("tempfile", "spark_graft_")
+                if word in text
+            ]
+    assert offenders == []

@@ -60,7 +60,6 @@ def run_audit(sf_dir: str, out_md: str, names: list[str], timeout: int) -> tuple
     try:
         p = subprocess.run(
             cmd, capture_output=True, text=True, timeout=timeout, cwd=REPO,
-            env={**os.environ, "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS", "16")},
         )
     except subprocess.TimeoutExpired:
         return False, "TIMEOUT"

@@ -105,7 +105,6 @@ def main() -> None:
     subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--worker", out, sf_dir],
         check=True,
-        env={**os.environ, "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS", "32")},
         cwd=REPO,
     )
     data = json.load(open(out))

@@ -45,7 +45,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
 def main() -> None:
     from pipeline_query_engine_demo_spark.plans import partitioned
-    from pipeline_query_engine_demo_spark.session import get_spark
+    from pipeline_query_engine_demo_spark.session import get_spark, replica_path
 
     spark = get_spark("dpp-experiment")
     spark.sparkContext.setLogLevel("ERROR")
@@ -86,11 +86,11 @@ def main() -> None:
     # and unpartitioned twins carrying the same derived column.
     li_part = partitioned.lineitem_by_ship_month(spark, SF_DIR)
     ev_part = partitioned.events_by_day(spark, SF_DIR)
-    li_twin = partitioned._replica_path(SF_DIR, "lineitem_twin_flat")
-    ev_twin = partitioned._replica_path(SF_DIR, "events_twin_flat")
-    if not os.path.exists(os.path.join(li_twin, "_SUCCESS")):
+    li_twin, li_ready = replica_path(SF_DIR, "lineitem_twin_flat")
+    ev_twin, ev_ready = replica_path(SF_DIR, "events_twin_flat")
+    if not li_ready:
         spark.read.parquet(li_part).write.mode("overwrite").parquet(li_twin)
-    if not os.path.exists(os.path.join(ev_twin, "_SUCCESS")):
+    if not ev_ready:
         spark.read.parquet(ev_part).write.mode("overwrite").parquet(ev_twin)
 
     from pipeline_query_engine_demo_spark.sources.catalog import load_table

@@ -14,6 +14,9 @@ export PYTHONPATH="$PWD"
 # shuffle-partition count follows it and changes AQE join choices, so a
 # manifest checked at another width can disagree with tests and bench.
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
+# A fresh temp base for the chain: every process's scratch root
+# (session.scratch_path) lands here, so a leaked one is visible below.
+export TMPDIR="$(mktemp -d)"
 log() { echo "=== $(date -u +%H:%M:%S) $1"; }
 
 # Preserve the prior round's committed bench sidecar for the tripwire
@@ -74,5 +77,12 @@ import __spark_entry__ as e
 print('entry rows:', e.entry(spark).count(), '| queries:', len(e.queries()), '| oracles:', len(e.oracle_sql()))
 spark.stop()
 PY
+
+log "STEP 11: scratch leak check"
+leaked="$(find "$TMPDIR" -maxdepth 1 -name 'spark_graft_*')"
+if [ -n "$leaked" ]; then
+  echo "FAIL: scratch roots left behind in $TMPDIR:"; echo "$leaked"; exit 1
+fi
+rm -rf "$TMPDIR"
 
 log "CHAIN DONE"
