@@ -15,6 +15,7 @@ surveyed in /root/repo/SURVEY.md), re-expressed Spark-first:
 
 Layout:
     session      SparkSession factory with scale-oriented defaults
+    pyworker     Python-worker daemon entry that loads the installed pyspark
     sources      parquet catalog / readers for the fixture tables (write
                  paths live in plans.sinks: parquet/csv/json/orc, bucketed)
     plans        the oracle-checked query corpus (name -> builder + SQL)
@@ -23,7 +24,16 @@ Layout:
     streaming    Structured Streaming pipelines over the events table
 """
 
-from pipeline_query_engine_demo_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy: importing the package must not import pyspark, because the
+    # Python-worker daemon (``python -m pipeline_query_engine_demo_spark.pyworker``)
+    # imports it before ``pyworker`` puts the installed pyspark first.
+    if name == "get_spark":
+        from pipeline_query_engine_demo_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

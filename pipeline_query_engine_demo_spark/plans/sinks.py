@@ -1062,4 +1062,6 @@ def write_rebalanced_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = scratch_path("rebalanced")
     sel.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path).orderBy("orderkey")
+    # The schema is the one just written: passing it skips the footer
+    # inference job a bare read runs at build time.
+    return spark.read.schema(sel.schema).parquet(path).orderBy("orderkey")

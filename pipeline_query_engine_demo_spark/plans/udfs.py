@@ -114,21 +114,27 @@ def pandas_udf_grouped_agg_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
         return float(qty.sum())
 
     lineitem = load_table(spark, sf_dir, "lineitem")
-    # r12 optimization (guide §4/§2.5): a grouped-agg pandas UDF ships every
-    # row through Arrow with no partial aggregation, so its parallelism IS
-    # the Python-worker count = the agg's partition count. AQE sizes that
-    # by shuffle BYTES (3.6 MB -> 3 partitions), serializing the Arrow
-    # boundary onto 3 workers. An explicit hash repartition on the group
-    # key at cluster width both fans out the Python stage and already
-    # satisfies the aggregation's required partitioning (no extra
-    # exchange). Layout-gated: None on real multi-file inputs.
+    # A grouped-agg pandas UDF ships every row through Arrow with no
+    # partial aggregation, so its parallelism IS the Python-worker count =
+    # the agg's partition count. One range exchange on the group key, at
+    # cluster width where the layout needs fan-out (fanout_width, None on
+    # real multi-file inputs) and at the shuffle width otherwise, both
+    # fans out the Python stage and satisfies the aggregate's clustering
+    # AND the ORDER BY's ordering. A hash exchange there would leave a
+    # range exchange above the aggregate, whose bounds-sampling job runs
+    # the Python aggregate a second time. The key is aliased after the
+    # sort: aliased in the groupBy, it hides from the planner that the
+    # aggregate's output is already range-partitioned on it.
     w = fanout_width(spark, sf_dir, "lineitem")
-    if w:
-        lineitem = lineitem.repartition(w, "l_suppkey")
+    ranged = (
+        lineitem.repartitionByRange(w, "l_suppkey") if w
+        else lineitem.repartitionByRange("l_suppkey")
+    )
     return (
-        lineitem.groupBy(F.col("l_suppkey").alias("suppkey"))
+        ranged.groupBy("l_suppkey")
         .agg(total("l_quantity").alias("total_qty"))
-        .orderBy("suppkey")
+        .orderBy("l_suppkey")
+        .select(F.col("l_suppkey").alias("suppkey"), "total_qty")
     )
 
 

@@ -86,9 +86,10 @@ def _add_worker_pythonpath(spark: SparkSession, path: str) -> None:
 def ensure_package_on_workers(spark: SparkSession) -> None:
     """Let Python workers import this package from any working directory.
 
-    Workers unpickle Python data sources by reference, so they must
-    import ``pipeline_query_engine_demo_spark``; without this they find
-    it only when the JVM's cwd is the repo root."""
+    Workers unpickle Python data sources by reference, and a session
+    from :func:`get_spark` starts its daemon from ``pyworker``, so they
+    must import ``pipeline_query_engine_demo_spark``; without this they
+    find it only when the JVM's cwd is the repo root."""
     _add_worker_pythonpath(spark, _PACKAGE_ROOT)
 
 
@@ -134,6 +135,22 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # --- Python interop -------------------------------------------------
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # Workers load pyspark from the installed tree's bytecode, not from
+    # $SPARK_HOME's source zip (pyworker.py); get_spark puts the package
+    # on the workers' PYTHONPATH so the daemon finds this module.
+    "spark.python.daemon.module": "pipeline_query_engine_demo_spark.pyworker",
+    # --- streaming ------------------------------------------------------
+    # Checkpoint and state files are renamed through FileSystem.rename,
+    # atomic on a POSIX local FS. The default FileContext manager calls
+    # getFileLinkStatus on both paths (and on their .crc sidecars), and
+    # without native libhadoop each call forks `readlink` (perfbench
+    # stream_ingest's drain commits its state in 0.02 s here, in 0.36 s
+    # through FileContext, traced on a 4-core box). HDFS or native
+    # libhadoop on a cluster keeps Spark's default (SCALE.md).
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
     # --- misc -----------------------------------------------------------
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
@@ -259,8 +276,14 @@ def get_spark(app_name: str = "pipeline-query-engine-spark", **overrides: str) -
         # (observed at 10x sf0.1: notEnoughMemoryToBuildAndBroadcastTable).
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
         or _default_driver_memory(),
+        # Like the memory above, honored only by a JVM this call launches:
+        # its temp files (native lz4/snappy libraries, the checkpoints of
+        # memory sinks) go under the scratch root and leave with it.
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={scratch_path()}",
         **overrides,
     }
     for key, value in conf.items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ensure_package_on_workers(spark)
+    return spark

@@ -800,3 +800,18 @@ def test_rebalance_hint_survives_to_plan(spark, sf_dir):
     )
     plan = sel._jdf.queryExecution().optimizedPlan().toString()
     assert "RebalancePartitions" in plan
+
+
+def test_grouped_agg_pandas_udf_has_one_range_exchange(spark, sf_dir):
+    """One range exchange on the group key serves both the grouped-agg
+    pandas UDF and the ORDER BY. A second exchange above the aggregate
+    would make its bounds-sampling job run the Python aggregate again."""
+    import re
+
+    from pipeline_query_engine_demo_spark.plans import udfs
+
+    df = udfs.pandas_udf_grouped_agg_qty(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"\bExchange (\w+)", plan)
+    assert exchanges == ["rangepartitioning"], plan

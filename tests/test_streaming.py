@@ -1294,12 +1294,13 @@ def test_tws_map_state_merges_across_batches(spark, sf_dir, tmp_path):
 def test_tws_value_state_ttl_expires(spark, tmp_path):
     """TTL on a state variable (getValueState(ttlDurationMs=...)) — the
     last knob of the arbitrary-state API: state written in batch 1 must
-    be GONE when batch 2 reads it after sleeping past the TTL (the
-    counter restarts), while a generous-TTL control accumulates across
-    the identical two-batch shape. TTL needs timeMode=ProcessingTime.
-    Single drain, maxFilesPerTrigger=1; the sleep happens INSIDE the
-    processor before the batch-2 read, so wall time provably passes
-    between the TTL reset and the expiry check.
+    be GONE when batch 2 reads it past the TTL (the counter restarts),
+    while a generous-TTL control accumulates across the identical
+    two-batch shape. TTL needs timeMode=ProcessingTime. Single drain,
+    maxFilesPerTrigger=1. Spark judges expiry against each micro-batch's
+    start timestamp, not the wall clock inside the processor, so the
+    sleep happens in batch 1: batch 2 cannot start until it is over, so
+    its timestamp is provably past the TTL.
 
     Drain protocol: under timeMode=ProcessingTime, availableNow does NOT
     terminate — Spark keeps scheduling empty micro-batches for TTL/timer
@@ -1339,7 +1340,7 @@ def test_tws_value_state_ttl_expires(spark, tmp_path):
 
     def run(tag, ttl_ms):
         src = str(tmp_path / f"ttl_src_{tag}")
-        for i, delay in enumerate((0, 5000)):
+        for i, delay in enumerate((5000, 0)):
             spark.createDataFrame(
                 [(1, delay)], "k long, delay_ms long"
             ).coalesce(1).write.mode("append").parquet(src)
@@ -1383,7 +1384,7 @@ def test_tws_value_state_ttl_expires(spark, tmp_path):
             rows = spark.table(name).collect()
         return sorted(r.n for r in rows)
 
-    # TTL 1.5s, 5s in-processor sleep before the batch-2 read: expired,
+    # TTL 1.5s, batch 1 sleeps 5s so batch 2 starts past it: expired,
     # count restarts at 1.
     assert run("short", 1500) == [1, 1]
     # TTL 10 min over the same shape: state survives and accumulates.

@@ -25,11 +25,14 @@ log() { echo "=== $(date -u +%H:%M:%S) $1"; }
 # (r11 advisor: the guard must be FATAL — without the || the heredoc's
 # nonzero exit was ignored and step 9 silently compared against an
 # invalid baseline.)
-git show HEAD:BENCH_DETAIL.json > /tmp/bench_detail_prior.json \
+# It lives under the chain's own TMPDIR, so concurrent chains never
+# overwrite each other's baseline.
+prior="$TMPDIR/bench_detail_prior.json"
+git show HEAD:BENCH_DETAIL.json > "$prior" \
   || { echo "FATAL: HEAD has no BENCH_DETAIL.json"; exit 1; }
-python - <<'PY' || { echo "FATAL: baseline not a full-tier FIFO record — find one"; exit 1; }
-import json
-d = json.load(open('/tmp/bench_detail_prior.json'))
+python - "$prior" <<'PY' || { echo "FATAL: baseline not a full-tier FIFO record — find one"; exit 1; }
+import json, sys
+d = json.load(open(sys.argv[1]))
 assert d.get('tier') == 'full', f"baseline tier={d.get('tier')} — find a full-tier commit"
 # Records from bench.py's former concurrent knob ran even the serialized
 # pass under FAIR (mixed protocol). Records without the key (before r12,
@@ -66,7 +69,7 @@ log "STEP 8: full-tier bench (box must be otherwise idle)"
 python bench.py 2>&1 | tail -2
 
 log "STEP 9: tripwire vs prior sidecar"
-python tools/bench_compare.py BENCH_DETAIL.json /tmp/bench_detail_prior.json 2>&1 | tail -8
+python tools/bench_compare.py BENCH_DETAIL.json "$prior" 2>&1 | tail -8
 
 log "STEP 10: vanilla driver-contract smoke"
 python - <<'PY'
