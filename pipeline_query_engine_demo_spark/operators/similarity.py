@@ -23,8 +23,8 @@ corpus:
 A vectorized numpy tier is provided for high dimensions
 (:func:`pandas_cosine_topk` single-query, :func:`numpy_cosine_topk`
 multi-query cogroup matmul, :func:`cosine_pandas_scorer` as a pluggable
-scoring seat for :func:`ivf_topk`). Measured crossover
-(tools/ann_crossover_experiment.py + SCALE.md round 12): the numpy
+scoring seat for :func:`ivf_topk`). Measured crossover (SCALE.md,
+"Round 12: numpy production ANN tier — measured crossover"): the numpy
 matmul is near-FLAT in dim (one C call per Arrow batch) while the
 interpreted HOF fold grows linearly — numpy wins 1.7x at dim=64 and 17x
 at dim=1024 over a 50 k corpus. The expression tier's counter-regime is

@@ -26,9 +26,9 @@ broadcast into a runtime IN-filter on the fact scan
 (``dynamicpruningexpression(...)``), so the fact table reads only the
 joined partitions — the single biggest scan reducer a real user hits
 daily. tools/audit_plans.py asserts the pruning shows up in every one
-of these plans (PARTITION_FILTER_REQUIRED), and
-tools/dpp_experiment.py measures the scan-bytes drop vs an
-unpartitioned twin (SCALE.md).
+of these plans (PARTITION_FILTER_REQUIRED); the scan-bytes drop vs an
+unpartitioned twin is recorded in SCALE.md, "Round 12: partition
+pruning — static + dynamic".
 """
 
 from __future__ import annotations
@@ -424,7 +424,7 @@ def dpp_urgent_months_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 12 joined month directories are ever read — at 100 TB this is
     scan reduction static pruning cannot express. Asserted in
     tools/audit_plans.py (PARTITION_FILTER_REQUIRED); scan-bytes drop
-    measured in tools/dpp_experiment.py."""
+    in SCALE.md, "Round 12: partition pruning — static + dynamic"."""
     fact = spark.read.parquet(lineitem_by_ship_month(spark, sf_dir))
     dim = (
         load_table(spark, sf_dir, "orders")
@@ -574,7 +574,13 @@ def dpp_bloom_composed_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle) — directory pruning and row pruning stacked on the
     same scan, pinned by tests/test_plans.py. The confs are held
     (``session.held_confs``) only while the eager localCheckpoint
-    executes the join."""
+    executes the join.
+
+    The bloom half runs under ``relational.BLOOM_FILTER_CONFS``, whose
+    lowered thresholds make the filter fire on fixture data, so this row
+    shows the mechanism, not a win: at sf0.1 on 4 cores
+    tools/bloom_experiment.py measured the bloom variant slower than the
+    plain join (1.13 vs 0.94 s) while it wrote 0.045x the shuffle bytes."""
     with held_confs(spark, _composed_pruning_confs()):
         agg = resilient_local_checkpoint(  # eager: joins under the held confs
             build_dpp_bloom_star(spark, sf_dir)

@@ -116,6 +116,7 @@ def test_python_datasource_reads_outside_repo_root(tmp_path):
         )
         spark = (
             SparkSession.builder.master("local[2]")
+            .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir={tmp_path}")
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )

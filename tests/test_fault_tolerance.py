@@ -32,6 +32,7 @@ _WORKER = textwrap.dedent(
     marker_dir = sys.argv[1]
     spark = (
         SparkSession.builder.master("local[4,4]")
+        .config("spark.driver.extraJavaOptions", f"-Djava.io.tmpdir={marker_dir}")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", "4")
         .getOrCreate()
@@ -69,7 +70,7 @@ _KILL_WORKER = textwrap.dedent(
     """
     import glob, hashlib, json, os, signal, sys, threading, time
 
-    repo, token = sys.argv[1], sys.argv[2]
+    repo, token, tmp = sys.argv[1], sys.argv[2], sys.argv[3]
     sys.path.insert(0, repo)
     from pyspark.sql import SparkSession
 
@@ -78,7 +79,13 @@ _KILL_WORKER = textwrap.dedent(
         .config("spark.executor.memory", "1200m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.executor.extraJavaOptions", f"-Dgraft.token={token}")
+        # JVM temp files (lz4/snappy native copies) go to the test's tmp
+        # dir: a SIGKILLed executor never runs their delete-on-exit.
+        .config("spark.driver.extraJavaOptions", f"-Djava.io.tmpdir={tmp}")
+        .config(
+            "spark.executor.extraJavaOptions",
+            f"-Dgraft.token={token} -Djava.io.tmpdir={tmp}",
+        )
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -139,7 +146,7 @@ def test_executor_loss_recovers_exact_results(spark, tmp_path):
     script = tmp_path / "kill_worker.py"
     script.write_text(_KILL_WORKER)
     proc = subprocess.run(
-        [sys.executable, str(script), REPO, token],
+        [sys.executable, str(script), REPO, token, str(tmp_path)],
         capture_output=True,
         text=True,
         timeout=560,

@@ -83,3 +83,22 @@ def test_only_session_names_the_scratch_root():
                 if word in text
             ]
     assert offenders == []
+
+
+def test_tools_keep_no_fixed_tmp_root_or_second_metrics_reader():
+    """Scripts under tools/ write under the scratch root (never a fixed
+    "/tmp" path that ignores TMPDIR and outlives the run) and read stage
+    metrics through the Tracer (never the Spark UI REST API)."""
+    tools = os.path.join(_REPO, "tools")
+    offenders = []
+    for f in sorted(os.listdir(tools)):
+        if not f.endswith(".py"):
+            continue
+        with open(os.path.join(tools, f)) as fh:
+            text = fh.read()
+        offenders += [
+            f"tools/{f}: {word}"
+            for word in ('"/tmp', "'/tmp", "urllib", "api/v1")
+            if word in text
+        ]
+    assert offenders == []

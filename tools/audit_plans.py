@@ -31,12 +31,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from tools import plan_fingerprint  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-#: Optional report path (argv[2]) — scale-experiment audits at a /tmp
-#: replica dir write their report elsewhere instead of clobbering the
-#: committed sf0.01 PLANS.md.
+#: Optional report path (argv[2]) — an audit at a scaled replica dir
+#: writes its report elsewhere instead of clobbering the committed
+#: sf0.01 PLANS.md.
 OUT_MD = sys.argv[2] if len(sys.argv) > 2 else None
 #: Optional query-name filter (argv[3:]) — scale audits run the handful
-#: of headline rows at a /tmp replica instead of all 424 builders (the
+#: of headline rows at a replica instead of all 424 builders (the
 #: full corpus contains deliberately-quadratic teaching queries, e.g.
 #: raw shingle posting-list joins, whose spills exhaust local disk on a
 #: clone replica where every shingle's document frequency is x100).

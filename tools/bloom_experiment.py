@@ -13,9 +13,10 @@ Both variants must return identical results (asserted): bloom false
 positives are re-checked by the join, so the filter can only shrink
 the exchange, never change the answer.
 
-Usage: python tools/bloom_experiment.py [sf_dir]
-  e.g. the x100 replica built by scale_experiment.py:
-       python tools/bloom_experiment.py /tmp/spark_graft_scale100
+Usage: python tools/bloom_experiment.py [sf_dir]  (default /root/testdata/sf0.1)
+  A scaled replica (``scale_experiment.build_replica``) lives under the
+  scratch root of the process that built it and is removed at its exit,
+  so meter a replica from inside that process, or pass a fixture dir.
 """
 
 from __future__ import annotations

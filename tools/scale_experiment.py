@@ -1,29 +1,33 @@
-"""10x scale experiment: replicate the sf0.1 fact tables tenfold (with
-shifted keys so cardinalities scale realistically), run the headline
-queries, and compare per-query time against sf0.1 to see how close to
-linear the plans scale. Writes nothing to the repo; data lives in /tmp.
+"""Scale harness: replicate the base fixture's fact tables ×factor (with
+shifted keys so cardinalities scale realistically), run the queries at
+the base and at the replica through ``bench.traced_pass``, and compare
+per-query wall time to see how close to linear the plans scale.
 
-Usage: python tools/scale_experiment.py [factor]
+The replica is written under the process's scratch root
+(``session.replica_path``) and leaves with it at exit; nothing is
+written to the repo. Each pass is the bench's traced pass, so a query
+that raises lands under ``errors`` and the run goes on; the report
+carries each pass's per-query ``layers`` record. Exits 1 if a query
+raised.
+
+Usage: python tools/scale_experiment.py [factor] [query ...]
+  factor defaults to 10, queries to ``bench.HEADLINE``; the base fixture
+  is ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
+import math
 import os
 import sys
-import time
-
-import pyspark.sql.functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BASE = "/root/testdata/sf0.1"
-FACTOR = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-#: Optional query-name filter (argv[2:]) — run a subset against the
-#: (idempotently reused) replica instead of the whole list, for
-#: incremental SCALE.md evidence on newly added operators.
-ONLY = set(sys.argv[2:])
-OUT = f"/tmp/spark_graft_scale{FACTOR}"
+import pyspark.sql.functions as F  # noqa: E402
+
+import bench  # noqa: E402
 
 #: (table, [id columns to shift]) — shifted by copy_i * 10**9 so keys
 #: stay unique across copies; foreign keys into the dims (custkey etc.)
@@ -37,336 +41,125 @@ SCALED = {
 }
 UNSCALED = ["region", "nation", "customer", "supplier", "part"]
 
-QUERIES = [
-    # round-11 session-2 additions: the Spark 4.0 DF-API subquery
-    # builders (scalar correlates on l_partkey over the scaled
-    # lineitem — a real decorrelated agg+join at x100), the Arrow UDF,
-    # and the DEFAULT-columns sink.
-    "lateral_join_df_api",
-    "scalar_subquery_df_api",
-    "exists_subquery_df_api",
-    "udf_arrow_optimized",
-    "insert_with_column_defaults",
-    # round-10 additions: the ×100 headline set's missing members — the
-    # two CC dedup variants' shared funnel entry and the remaining ANN
-    # tiers (judge item 1: every LLM headline operator needs a ×100 row).
-    "dedup_clusters_docs",
-    "ann_lsh_topk_embeddings",
-    "ann_hyperplane_topk_embeddings",
-    "ivf_topk_embeddings",
-    # round-12: the numpy production tiers (expression-vs-BLAS crossover
-    # rows next to cosine_topk/ivf_topk above) and the partition-pruning
-    # family over the Hive-partitioned fact replicas.
-    "numpy_cosine_topk_embeddings",
-    "ivf_numpy_topk_embeddings",
-    "static_partition_prune_lineitem",
-    "dpp_urgent_months_revenue",
-    "dpp_events_top_day_mix",
-    "streaming_multibatch_stateful_user_totals",
-    "streaming_multibatch_window_counts",
-    "numpy_cosine_topk_prebucketed",
-    "ivf_index_dpp_topk",
-    "bloom_filter_pruned_join",
-    "clustered_layout_rowgroup_skip",
-    "hilbert_layout_box_skip",
-    "dpp_bloom_composed_star",
-    # round-12 session 4: the file-manifest and bucket-prune tiers and
-    # the checkpoint restart-resume drain.
-    "manifest_file_skip_lineitem",
-    "bucket_pruned_scan",
-    "streaming_restart_resume_user_totals",
-    "delete_cow_file_rewrite",
-    "cbo_stats_join_reorder",
-    # round-9 additions: the 1-bit ANN tier, the truncated-dim recall
-    # dial, and the per-node triangle credit join.
-    "binary_sign_hamming_topk",
-    "matryoshka_truncated_recall",
-    "local_clustering_coefficient",
-    "decision_stump_totalprice",
-    "ridge_cv_one_pass",
-    "q1_pricing_summary",
-    "join_aqe_skew_split",
-    "ps_merge_groupby_segments",
-    "ridge_regression_normal_eq",
-    "gopher_repetition_filter",
-    "int8_quantized_topk",
-    "link_prediction_adamic_adar",
-    "nelson_aalen_hazard",
-    "bigram_greedy_decode",
-    "lsh_bands_recall_sweep",
-    "q3_shipping_priority",
-    "q5_regional_revenue",
-    "window_topk_per_group",
-    "asof_join_last_purchase",
-    "tumbling_window_counts",
-    "exact_dedup_docs",
-    "near_dup_pairs_docs",
-    "cosine_topk_embeddings",
-    "text_stats_docs",
-    # round-3 training-data operators
-    "kmeans_train_embeddings",
-    "incremental_dedup_docs",
-    "global_shuffle_positions",
-    "unigram_surprisal_scores",
-    "source_overlap_matrix",
-    "length_bucketed_batches",
-    # round-3 session-2 additions
-    "span_dedup_docs",
-    "bigram_lm_perplexity",
-    "timeseries_gap_fill",
-    "q9_product_profit",
-    "q18_large_volume_customers",
-    "q21_suppliers_kept_waiting",
-    # round-3 session-3 additions. semantic_dedup_embeddings is
-    # deliberately ABSENT: with the fixed 4 demo centroids its in-cell
-    # pair count is quadratic in corpus size (cells don't multiply), so
-    # a ×10 run measures the known-degenerate configuration, not the
-    # operator — production scales the centroid count (kmeans_train) to
-    # keep cell occupancy bounded. See SCALE.md findings.
-    "q2_min_cost_supplier",
-    "q12_shipping_delay",
-    "q20_dominant_suppliers",
-    "gopher_quality_filter",
-    "fuzzy_name_match_pairs",
-    "scd2_user_state_history",
-    "window_range_interval_frame",
-    "stats_corr_covar",
-    "zscore_outlier_events",
-    "bpe_pair_frequencies",
-    "temperature_sample_by_source",
-    # round-3 session-4 additions: the PQ/ANN compression tier, graph
-    # structure metrics, exact OLS, and the curation canonicalizer.
-    "pq_encode_embeddings",
-    "pq_adc_topk_embeddings",
-    "ivfpq_topk_embeddings",
-    "triangle_count_copurchase",
-    "stats_linear_regression",
-    "unicode_nfc_normalize",
-    # round-3 session-4 continued: curation/analytics/ops additions
-    "media_fingerprint_near_dup",
-    "epoch_repeat_oversample",
-    "contrastive_negative_pairs",
-    "cohort_retention_orders",
-    "snapshot_diff_orders",
-    "dataset_profile_orders",
-    # round-4 additions: the missing join surface, drift monitors, and
-    # the pre-shuffle skew diagnostic.
-    "join_right_outer",
-    "dataset_drift_psi",
-    "embedding_drift_centroid",
-    "key_skew_profile",
-    # round-4 session-5 additions: statistics, retrieval, intervals,
-    # sequences, curation. Cheap single-aggregate stats (welch/kappa/
-    # hhi) are present as scan-bound sanity rows.
-    "ewma_smoothed_values",
-    "interval_sweep_concurrency",
-    "mann_whitney_u_events",
-    "welch_ttest_acctbal",
-    "nearest_rank_percentiles",
-    "winsorized_mean_events",
-    "bm25_topk_docs",
-    "knn_classify_embeddings",
-    "mmr_diversified_topk",
-    "token_log_odds_by_source",
-    "assoc_rules_copurchase",
-    "event_transition_matrix",
-    "bfs_reachability_copurchase",
-    "rolling_distinct_users",
-    "cusum_change_detection",
-    "interval_overlap_join",
-    "diversity_capped_topk_docs",
-    # round-4 session-5 wave 3/4: funnel metrics, privacy audits,
-    # corpus reporting, retrieval eval, and the remaining robust stats.
-    "simhash_hamming_pairs",
-    "attribution_first_last_touch",
-    "weighted_median_price",
-    "wilson_ci_conversion",
-    "signup_to_purchase_latency",
-    "rfm_segmentation",
-    "benford_digit_test",
-    "seasonal_naive_backtest",
-    "mutual_information_source_lang",
-    "ivf_recall_vs_probes",
-    "seasonal_baseline_outliers",
-    "inter_event_gap_histogram",
-    "k_anonymity_audit",
-    "l_diversity_audit",
-    "trimmed_mean_events",
-    "heaps_law_vocab_growth",
-    "dataset_card_summary",
-    "dedup_funnel_report",
-    # round-6 additions: star-contraction clustering, the sketch family,
-    # spatial OD flows, sequential-pattern support.
-    "dedup_clusters_starcontract",
-    "kmv_distinct_shingles_by_source",
-    "theta_sketch_shingle_overlap",
-    "kmv_merge_global_distinct",
-    "spatial_od_flows",
-    "sequential_pattern_support",
-    "duplicated_substring_spans",
-    "rrf_hybrid_retrieval",
-    "ann_multiprobe_topk_embeddings",
-    # round-7 additions: set-similarity join, weighted SSSP, skyline,
-    # grid DBSCAN, the HLL + A-not-B sketch completions, the robust/
-    # decomposition statistics batch, targeted curation, collocations,
-    # record linkage, and the Hilbert layout key.
-    "setsim_prefix_join_docs",
-    "shortest_path_weighted_copurchase",
-    "skyline_parts_price_size",
-    "dbscan_customers_grid",
-    "hll_distinct_shingles_by_source",
-    "theta_sketch_anotb_difference",
-    "acf_daily_event_values",
-    "gini_revenue_concentration",
-    "t_closeness_audit",
-    "stl_decompose_daily_values",
-    "theil_sen_daily_trend",
-    "zipf_rank_frequency_fit",
-    "dsir_importance_selection",
-    "pmi_token_cooccurrence",
-    "jaro_winkler_linkage_pairs",
-    "hilbert_curve_events",
-    # round-7 session-2 additions: graph k-core (fact-derived edge
-    # list), the HLL sketch cube + bottom-k quantile sketch, BPE
-    # tokenizer training (corpus-pass word counts; vocab-sized rounds),
-    # and the cogroup two-input shuffle.
-    "kcore_peel_profile_copurchase",
-    "hll_rollup_trailing_parts",
-    "quantile_sketch_totalprice",
-    "bpe_learn_merges",
-    "cogroup_apply_customer_orders",
-    "ams_f2_skew_events",
-    "label_propagation_communities",
-    # round-7 session-3/4 additions: HITS, the trend/test statistics
-    # batch, the survival/resampling/forecasting family, distribution
-    # distances, CDC chunk dedup, sampling tables, and the distributed
-    # GD trainer. Calendar-bounded series queries (kendall/holt/
-    # page-hinkley/conformal) are scan-bound at x10 by design — their
-    # post-rollup work is day-count-sized.
-    "hits_hubs_authorities",
-    "mann_kendall_trend",
-    "isotonic_regression_minimax",
-    "js_divergence_sources",
-    "kaplan_meier_retention",
-    "ks_two_sample_acctbal",
-    "kendall_tau_event_pairs",
-    "poisson_bootstrap_ci_acctbal",
-    "page_hinkley_drift",
-    "pca_2d_parts_by_brand",
-    "wasserstein_doc_lengths",
-    "cdc_chunk_dedup",
-    "permutation_test_mean_diff",
-    "markov_entropy_rate",
-    "holt_linear_forecast",
-    "conformal_interval_daily",
-    "negative_sampling_unigram",
-    "jackknife_source_loo",
-    "logistic_regression_gd",
-    "kneser_ney_perplexity",
-    "sprt_ab_conversion",
-    "naive_bayes_source_classify",
-    "gram_matrix_embeddings",
-    "time_decayed_engagement",
-    "target_encoding_kfold",
-    "user_feature_matrix",
-    "containment_dedup_pairs",
-    "quantile_normalize_lengths",
-    "bh_fdr_segment_tests",
-    "sax_symbolic_daily",
-]
 
-
-def build_data(spark) -> None:
-    os.makedirs(OUT, exist_ok=True)
-    for t in UNSCALED:
-        link = os.path.join(OUT, f"{t}.parquet")
-        if not os.path.exists(link):
-            os.symlink(os.path.join(BASE, f"{t}.parquet"), link)
+def build_replica(spark, base: str, factor: int) -> str:
+    """Write the ×``factor`` replica of fixture ``base`` and return its
+    directory: the scaled tables as write-once replicas (a table whose
+    write left ``_SUCCESS`` is not rebuilt), the dims symlinked to
+    ``base``."""
+    from pipeline_query_engine_demo_spark.session import replica_path
     from pipeline_query_engine_demo_spark.sources.catalog import load_table
 
+    sf_dir = replica_path(base, f"x{factor}")[0]
+    os.makedirs(sf_dir, exist_ok=True)
     for t, id_cols in SCALED.items():
-        dest = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(dest):
+        dest, ready = replica_path(base, f"x{factor}/{t}.parquet")
+        if ready:
             continue
-        base = load_table(spark, BASE, t)
-        # Replicate via explode(sequence(0, FACTOR-1)) rather than a
-        # FACTOR-way unionByName: one scan, a plan whose size does not
-        # grow with FACTOR, and even output partitions at x100.
-        out = (
-            base.withColumn(
-                "__copy", F.explode(F.sequence(F.lit(0), F.lit(FACTOR - 1)))
-            )
+        # Replicate via explode(sequence(0, factor-1)) rather than a
+        # factor-way unionByName: one scan, a plan whose size does not
+        # grow with factor, and even output partitions at x100.
+        out = load_table(spark, base, t).withColumn(
+            "__copy", F.explode(F.sequence(F.lit(0), F.lit(factor - 1)))
         )
         for col in id_cols:
             out = out.withColumn(
                 col, F.col(col) + F.col("__copy").cast("long") * F.lit(10**9)
             )
-        out = out.drop("__copy")
-        n_parts = min(256, max(32, FACTOR * 4))
-        out.repartition(n_parts).write.mode("overwrite").parquet(dest)
-        print(f"built {t}: {out.count()} rows", file=sys.stderr)
+        n_parts = min(256, max(32, factor * 4))
+        out.drop("__copy").repartition(n_parts).write.mode("overwrite").parquet(dest)
+        print(f"built {t}: {spark.read.parquet(dest).count()} rows", file=sys.stderr)
+    for t in UNSCALED:
+        link = os.path.join(sf_dir, f"{t}.parquet")
+        if not os.path.lexists(link):
+            os.symlink(os.path.join(base, f"{t}.parquet"), link)
+    return sf_dir
 
 
-def run(spark, sf_dir: str) -> dict[str, float]:
+def scaled_width(spark, factor: int) -> int:
+    """Shuffle width of a ×``factor`` run: the session's cores times
+    ⌊√factor⌋. At ×100 a core-count width puts ~2 GB in each shuffle
+    partition (spill territory); sqrt-scaling keeps per-partition bytes
+    flat-ish while AQE coalesces the small stages back down."""
+    return spark.sparkContext.defaultParallelism * max(1, math.isqrt(factor))
+
+
+def run_at(spark, sf_dir: str, names: list[str], width: int | None = None):
+    """``bench.traced_pass`` over ``names`` at ``sf_dir``, with the shuffle
+    width held at ``width`` for the pass (the session default if None)."""
     from pipeline_query_engine_demo_spark import plans
+    from pipeline_query_engine_demo_spark.session import held_confs
 
-    # Scale the shuffle width with the data, the way a real deployment
-    # would (the session conf's own comment: "At 100 TB this would be
-    # O(10k); AQE coalesces down, so err high"). At x100 the pinned 32
-    # partitions put ~2 GB in each shuffle partition — spill territory —
-    # and produced 2-3x run-to-run variance on the join/agg rows.
-    # sqrt-scaling keeps per-partition bytes flat-ish while AQE coalesces
-    # the small stages back down.
-    n_shuffle = 32 if sf_dir == BASE else 32 * max(1, int(FACTOR**0.5))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
-    qs = plans.queries()
-    qs["q1_pricing_summary"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    out = {}
-    for name in QUERIES:
-        if ONLY and name not in ONLY:
-            continue
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        out[name] = round(time.perf_counter() - t0, 2)
-        # Storage hygiene between timed queries: localCheckpoint blocks
-        # from dedup/CC pipelines stay referenced until the Python-side
-        # DataFrames are GC'd, so a 20-query x100 session otherwise
-        # accumulates tens of GB of block-manager state and later rows
-        # time memory pressure, not their own plan.
-        spark.catalog.clearCache()
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            try:
-                jrdd.unpersist(False)
-            except Exception:
-                pass
-    return out
+    confs = {} if width is None else {"spark.sql.shuffle.partitions": str(width)}
+    with held_confs(spark, confs):
+        return bench.traced_pass(spark, sf_dir, names, plans.queries())
 
 
-def main() -> None:
-    # The 16g default heap GC-thrashes at x100 (observed: 2-3x variance
-    # on kmeans/near-dup between otherwise idle runs); this experiment
-    # is ABOUT the x100 regime, so default its driver to 64g of the
-    # 128 GiB box unless the caller overrides.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "64g")
+def _session():
     from pipeline_query_engine_demo_spark.session import get_spark
 
-    spark = get_spark("scale-experiment")
+    spark = get_spark("scale-experiment", **bench.RETENTION)
     spark.sparkContext.setLogLevel("ERROR")
-    build_data(spark)
-    base = run(spark, BASE)
-    scaled = run(spark, OUT)
+    return spark
+
+
+def _warm_then_trace(spark, base: str, sf_dir: str, names: list[str], width=None):
+    """An untimed warm-up pass at ``base`` (the first run of each path
+    pays JIT, codegen and Python-worker start), then ``run_at``. A query
+    that raises in the warm-up raises again, and is recorded, in the
+    traced pass."""
+    from pipeline_query_engine_demo_spark import plans
+
+    qs = plans.queries()
+    for name in names:
+        with contextlib.suppress(Exception):
+            bench.noop_write(qs[name](spark, base))
+        bench.drop_run_blocks(spark)
+    return run_at(spark, sf_dir, names, width)
+
+
+def main(argv: list[str]) -> None:
+    factor = int(argv[0]) if argv else 10
+    names = argv[1:] or bench.HEADLINE
+    base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    label, scaled = os.path.basename(os.path.normpath(base)), f"x{factor}"
+
+    spark = _session()
+    sf_dir = build_replica(spark, base, factor)
+    widths = {
+        label: int(spark.conf.get("spark.sql.shuffle.partitions")),
+        scaled: scaled_width(spark, factor),
+    }
+    base_walls, base_layers, base_errors = _warm_then_trace(spark, base, base, names)
+    # One traced pass per SparkContext: every Tracer numbers its spans
+    # from 0 and owns each job grouped perfbench-<span id>, so a second
+    # pass in one context would be charged the first one's jobs.
+    spark.stop()
+    spark = _session()
+    walls, layers, errors = _warm_then_trace(spark, base, sf_dir, names, widths[scaled])
     report = {
-        name: {
-            "sf0.1_sec": base[name],
-            f"x{FACTOR}_sec": scaled[name],
-            "scaling": round(scaled[name] / base[name], 1) if base[name] > 0 else None,
-        }
-        for name in QUERIES
-        if not ONLY or name in ONLY
+        "factor": factor,
+        "shuffle_partitions": widths,
+        "queries": {
+            n: {
+                f"{label}_s": base_walls.get(n),
+                f"{scaled}_s": walls.get(n),
+                "ratio": round(walls[n] / base_walls[n], 2)
+                if base_walls.get(n) and n in walls
+                else None,
+            }
+            for n in names
+        },
+        "errors": {
+            **{f"{label}:{n}": e for n, e in base_errors.items()},
+            **{f"{scaled}:{n}": e for n, e in errors.items()},
+        },
+        "layers": {label: base_layers, scaled: layers},
     }
     print(json.dumps(report, indent=2))
+    if report["errors"]:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
