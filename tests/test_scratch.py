@@ -4,6 +4,7 @@ outlives the process."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -101,4 +102,47 @@ def test_tools_keep_no_fixed_tmp_root_or_second_metrics_reader():
             for word in ('"/tmp', "'/tmp", "urllib", "api/v1")
             if word in text
         ]
+    assert offenders == []
+
+
+def _is_main_guard(test: ast.expr) -> bool:
+    return (
+        isinstance(test, ast.Compare)
+        and isinstance(test.left, ast.Name)
+        and test.left.id == "__name__"
+        and any(isinstance(c, ast.Constant) and c.value == "__main__" for c in test.comparators)
+    )
+
+
+def _import_time_argv_reads(node: ast.AST) -> list[int]:
+    """Lines reading ``sys.argv`` outside a function body or the
+    ``__main__`` block, i.e. while the module is being imported.
+    Decorators and default values run at import, so they count."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        children = [*node.decorator_list, node.args]
+    elif isinstance(node, ast.If) and _is_main_guard(node.test):
+        children = node.orelse
+    else:
+        children = list(ast.iter_child_nodes(node))
+    lines = [ln for c in children for ln in _import_time_argv_reads(c)]
+    if (
+        isinstance(node, ast.Attribute)
+        and node.attr == "argv"
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "sys"
+    ):
+        lines.append(node.lineno)
+    return lines
+
+
+def test_tools_read_argv_only_when_run():
+    """Importing a tool parses no arguments: perfbench's child imports
+    check_correctness.fingerprint under its own CONFIG/RESULT argv."""
+    tools = os.path.join(_REPO, "tools")
+    offenders = []
+    for f in sorted(os.listdir(tools)):
+        if f.endswith(".py"):
+            with open(os.path.join(tools, f)) as fh:
+                tree = ast.parse(fh.read())
+            offenders += [f"tools/{f}:{ln}" for ln in _import_time_argv_reads(tree)]
     assert offenders == []

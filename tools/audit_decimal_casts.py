@@ -36,18 +36,13 @@ import re
 import sys
 from fractions import Fraction
 
-import duckdb
 import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pipeline_query_engine_demo_spark.plans import registry  # noqa: E402
 import __spark_entry__  # noqa: E402,F401  (imports register every query)
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
+from tools.check_correctness import duckdb_views  # noqa: E402
 
 #: Flag when the decimal value clears a double rounding boundary by less
 #: than this fraction of an ulp. 1e-6 ulps is ~6 orders of magnitude
@@ -87,13 +82,10 @@ def margin_ulps(x: float, scale: int) -> float | None:
 
 
 def main() -> None:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    con = duckdb_views(sf_dir)
     sites = audit_sites()
-    print(f"{len(sites)} oracle(s) with wide-DECIMAL -> DOUBLE cast sites @ {SF_DIR}")
+    print(f"{len(sites)} oracle(s) with wide-DECIMAL -> DOUBLE cast sites @ {sf_dir}")
     flagged: list[tuple[str, str, float, float]] = []
     worst: tuple[float, str, str] = (math.inf, "", "")
     n_checked = 0

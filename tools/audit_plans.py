@@ -1,46 +1,27 @@
-"""Physical-plan audit over the whole query corpus.
-
-For every registered query, captures the executed plan and checks
-scale invariants:
+"""Physical-plan rules, checked by tools/check_correctness.py on the
+executed (AQE-final) plan of every non-streaming query it runs:
 
 - no CartesianProduct / BroadcastNestedLoopJoin unless the query is
   explicitly whitelisted (join_cross is a deliberate cross join; the
   scalar-subquery pattern broadcasts a 1-row aggregate);
-- no row-at-a-time PythonUDF except the one API-coverage query;
-- parquet scans must prune columns (ReadSchema never the full table
-  when the query touches a strict subset);
+- no row-at-a-time Python eval outside the three whitelisted
+  API-coverage queries;
 - no partition-less Window (``Window.orderBy`` without partitionBy —
   a single-reducer sort of its whole input) unless the query is
   whitelisted as running it over a bounded aggregate (vocab-, bucket-,
   or status-sized), so the gate log's WindowExec warnings can't mask
-  a real single-partition regression on a fact table.
-
-Writes PLANS.md: per-query exchange/scan/join-strategy summary.
-
-Usage: python tools/audit_plans.py [sf_dir]
+  a real single-partition regression on a fact table;
+- the partition-pruning, pushed-filter and bucket-pruning queries show
+  their required pattern in the plan text. The PushedFilters patterns
+  need untruncated metadata (``spark.sql.maxMetadataStringLength``
+  1000, which the sweep's session sets).
 """
 
 from __future__ import annotations
 
-import os
 import re
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools import plan_fingerprint  # noqa: E402
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-#: Optional report path (argv[2]) — an audit at a scaled replica dir
-#: writes its report elsewhere instead of clobbering the committed
-#: sf0.01 PLANS.md.
-OUT_MD = sys.argv[2] if len(sys.argv) > 2 else None
-#: Optional query-name filter (argv[3:]) — scale audits run the handful
-#: of headline rows at a replica instead of all 424 builders (the
-#: full corpus contains deliberately-quadratic teaching queries, e.g.
-#: raw shingle posting-list joins, whose spills exhaust local disk on a
-#: clone replica where every shingle's document frequency is x100).
-ONLY = set(sys.argv[3:])
+from tools import plan_fingerprint
 
 #: Queries allowed to plan a nested-loop/cartesian: deliberate cross
 #: joins of tiny inputs (dims, 1-row aggregates, broadcast query sets).
@@ -55,7 +36,6 @@ NL_WHITELIST = {
     "lsh_bands_recall_sweep",  # 1-row count scalars (per-config totals + union total) broadcast onto 3 sweep rows
     "ann_recall_at_k",  # inherits cosine_topk's intended brute-force BNLJ ground truth
     "pq_recall_at_k",  # same: brute-force cosine ground-truth branch
-    "pandas_cosine_topk_embeddings",
     "tfidf_top_terms",
     "unigram_surprisal_scores",  # 1-row corpus-total broadcast onto the vocab
     "bigram_lm_perplexity",  # 1-row vocab-size broadcast onto the scorer
@@ -73,7 +53,6 @@ NL_WHITELIST = {
     "bm25_topk_docs",  # 1-row corpus-stats broadcast onto the query-term postings
     "knn_classify_embeddings",  # inherits cosine_topk's intended brute-force BNLJ scoring
     "assoc_rules_copurchase",  # 1-row basket-total broadcast onto the rule table
-    "mmr_diversified_topk",  # inherits cosine_topk's intended brute-force BNLJ candidate scoring
     "token_log_odds_by_source",  # 1-row corpus-totals broadcast onto the vocabulary table
     "ann_ndcg_at_k",  # inherits cosine_topk's intended brute-force BNLJ ground truth
     "grouped_split_by_user",  # 1-row event-total broadcast onto the 3-row split summary
@@ -104,7 +83,6 @@ NL_WHITELIST = {
     "t_closeness_audit",  # class x band grid cross join is DOMAIN-sized (|classes|*|bands| rows) by construction, plus 1-row (N, m) totals broadcast
     "dsir_importance_selection",  # two 1-row token-total broadcasts (target N, raw N) onto the 4096-row bucket table
     "pmi_token_cooccurrence",  # 1-row document-count broadcast onto the pair-count table
-    "bpe_learn_merges",  # per-round 1-row argmax merge-pair broadcast onto the VOCAB table (model-sized state; the corpus is touched once, in the word-frequency aggregate)
     "ams_f2_skew_events",  # 1-row sketch summary x 1-row exact-F2 scalar join
     "negative_sampling_unigram",  # inverse-CDF draw: interval-containment join of sample ids against the BROADCAST 500-row vocab CDF — bounded 500 x samples, corpus-independent
     "logistic_regression_gd",  # per-step 1-row MODEL broadcast onto the feature scan — the data-parallel GD shape; gradients cross the wire as 3 decimal sums
@@ -138,8 +116,6 @@ UNPARTITIONED_WINDOW_WHITELIST: dict[str, str] = {
     "quantile_normalize_lengths": "cumulative counts over the DISTINCT-length histogram (hundreds of rows; the per-doc ranks are source-partitioned)",
     "bh_fdr_segment_tests": "rank over the m = C(|segments|,2) = 10-row p-value table (the permutation test upstream is the scale-shaped stage)",
     "bpe_pair_frequencies": "rank over the pair-vocabulary aggregate",
-    "bpe_apply_merges": "rank over the pair-vocabulary aggregate",
-    "approx_top_k_tokens": "rank over the token-vocabulary aggregate",
     "global_shuffle_positions": "cumulative offsets over the 256-row bucket table",
     "equi_depth_histogram": "ntile for optimizer statistics over a sample-scale table (docstring documents the sketch substitute at 100 TB)",
     "sort_null_ordering": "NULLS FIRST/LAST API surface over a 60-row filtered slice",
@@ -198,107 +174,30 @@ BUCKET_PRUNE_REQUIRED: dict[str, str] = {
     "bucket_pruned_scan": r"SelectedBucketsCount: [1-3] out of 16",
 }
 
-# Streaming queries execute a real stream inside their builder (memory
-# sink / foreachBatch), so the returned DataFrame's plan is just the
-# sink read-back — not the streaming computation. They are skipped by
-# REGISTRY category (no manually-maintained name list to drift) and the
-# report row says plainly that the streaming plan is not audited here.
 
-
-def main() -> None:
-    from pipeline_query_engine_demo_spark import plans
-    from pipeline_query_engine_demo_spark.session import get_spark
-
-    spark = get_spark("plan-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Plan strings truncate long metadata fields at 100 chars by
-    # default, which cuts PushedFilters lists mid-token and would make
-    # the PUSHED_FILTER_REQUIRED regexes silently unmatchable.
-    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
-
-    rows = []
-    violations = []
-    for name, build in sorted(plans.queries().items()):
-        if ONLY and name not in ONLY:
-            continue
-        if plans.REGISTRY[name].category == "streaming":
-            rows.append((name, "(streaming — executes a stream; sink read-back plan not audited)", ""))
-            continue
-        df = build(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # Strategy-set extraction is shared with check_correctness's
-        # plan-fingerprint manifest (tools/plan_fingerprint.py) so the
-        # audit's invariants and the manifest's drift tripwire can never
-        # disagree about what the plan contains.
-        fp = plan_fingerprint.extract(plan)
-        n_exchange = fp["exchanges"]
-        joins = fp["joins"]
-        has_pyudf = "BatchEvalPython" in fp["python_eval"]
-        arrow = [k for k in plan_fingerprint.ARROW_OPS if k in fp["python_eval"]]
-        if any(j in ("BroadcastNestedLoopJoin", "CartesianProduct") for j in joins) and name not in NL_WHITELIST:
-            violations.append(f"{name}: nested-loop/cartesian join in plan")
-        if has_pyudf and name not in PYUDF_WHITELIST:
-            violations.append(f"{name}: row-at-a-time Python UDF in plan")
-        # Partition-less window: see plan_fingerprint.count_bare_windows.
-        n_bare_windows = fp["bare_windows"]
-        if n_bare_windows and name not in UNPARTITIONED_WINDOW_WHITELIST:
-            violations.append(
-                f"{name}: {n_bare_windows} partition-less Window(s) — single-reducer "
-                "sort; re-shape (two-phase bucketed rank) or whitelist with a "
-                "bounded-input justification"
-            )
-        if name in PARTITION_FILTER_REQUIRED:
-            if not re.search(PARTITION_FILTER_REQUIRED[name], plan):
-                violations.append(
-                    f"{name}: required partition pruning absent from executed plan "
-                    f"(expected /{PARTITION_FILTER_REQUIRED[name]}/)"
-                )
-        if name in PUSHED_FILTER_REQUIRED:
-            if not re.search(PUSHED_FILTER_REQUIRED[name], plan):
-                violations.append(
-                    f"{name}: required pushed range filter absent from executed plan "
-                    f"(expected /{PUSHED_FILTER_REQUIRED[name]}/)"
-                )
-        if name in BUCKET_PRUNE_REQUIRED:
-            if not re.search(BUCKET_PRUNE_REQUIRED[name], plan):
-                violations.append(
-                    f"{name}: required bucket pruning absent from executed plan "
-                    f"(expected /{BUCKET_PRUNE_REQUIRED[name]}/)"
-                )
-        extra = [f"bare-window x{n_bare_windows}"] if n_bare_windows else []
-        if name in PARTITION_FILTER_REQUIRED:
-            extra.append(
-                "partition-pruned scan"
-                + (" (DPP)" if "dynamicpruningexpression" in plan else " (static)")
-            )
-        notes = ", ".join(joins + arrow + extra)
-        rows.append((name, f"{n_exchange} exchange(s)", notes))
-
-    out_md = OUT_MD or os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
-    )
-    with open(out_md, "w") as f:
-        f.write(
-            "# PLANS — physical-plan audit (generated by tools/audit_plans.py)\n\n"
-            f"Corpus of {len(rows)} queries at {SF_DIR}. Invariants: no accidental\n"
-            "cartesian/nested-loop joins, no row-at-a-time Python UDFs outside the\n"
-            "one API-coverage query, Arrow for every Python hot path.\n\n"
-            "| Query | Shuffles | Join strategies / Python eval |\n|---|---|---|\n"
+def violations(name: str, plan: str) -> list[str]:
+    """The rules ``name``'s executed-plan string breaks, one message each."""
+    out = []
+    joins = set(plan_fingerprint.JOIN_RE.findall(plan))
+    if joins & {"BroadcastNestedLoopJoin", "CartesianProduct"} and name not in NL_WHITELIST:
+        out.append(f"{name}: nested-loop/cartesian join in plan")
+    if plan_fingerprint.has_row_python_udf(plan) and name not in PYUDF_WHITELIST:
+        out.append(f"{name}: row-at-a-time Python UDF in plan")
+    n_bare_windows = plan_fingerprint.count_bare_windows(plan)
+    if n_bare_windows and name not in UNPARTITIONED_WINDOW_WHITELIST:
+        out.append(
+            f"{name}: {n_bare_windows} partition-less Window(s) — single-reducer "
+            "sort; re-shape (two-phase bucketed rank) or whitelist with a "
+            "bounded-input justification"
         )
-        for name, ex, notes in rows:
-            f.write(f"| {name} | {ex} | {notes} |\n")
-        f.write("\n## Violations\n\n")
-        if violations:
-            for v in violations:
-                f.write(f"- **{v}**\n")
-        else:
-            f.write("None.\n")
-
-    print(f"{len(rows)} plans audited, {len(violations)} violations")
-    for v in violations:
-        print("VIOLATION:", v)
-    sys.exit(1 if violations else 0)
-
-
-if __name__ == "__main__":
-    main()
+    for what, required in (
+        ("partition pruning", PARTITION_FILTER_REQUIRED),
+        ("pushed range filter", PUSHED_FILTER_REQUIRED),
+        ("bucket pruning", BUCKET_PRUNE_REQUIRED),
+    ):
+        if name in required and not re.search(required[name], plan):
+            out.append(
+                f"{name}: required {what} absent from executed plan "
+                f"(expected /{required[name]}/)"
+            )
+    return out

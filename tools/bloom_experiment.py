@@ -30,10 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-
 
 def main() -> None:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     from perfbench.tracing import RETENTION, Tracer
     from pipeline_query_engine_demo_spark.plans import relational
     from pipeline_query_engine_demo_spark.session import get_spark, held_confs
@@ -44,7 +43,7 @@ def main() -> None:
 
     def agg():
         return (
-            relational.build_bloom_filter_join(spark, SF_DIR)
+            relational.build_bloom_filter_join(spark, sf_dir)
             .groupBy("l_returnflag")
             .agg(
                 F.count(F.lit(1)).alias("n"),
@@ -87,7 +86,7 @@ def main() -> None:
     assert not out["bloom_off"]["might_contain_in_plan"]
     assert results["bloom_on"] == results["bloom_off"], "results diverged"
     summary = {
-        "sf_dir": SF_DIR,
+        "sf_dir": sf_dir,
         **out,
         "results_identical": True,
         "shuffle_bytes_ratio": round(

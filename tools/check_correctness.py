@@ -3,11 +3,13 @@
 Runs every ``queries()`` entry at a given SF dir and compares it against
 its ``oracle_sql()`` SQL in DuckDB: row count, column names/types, and
 exact values after sorting columns by name and rows by all columns.
-Queries without an oracle get the rows-only check.
+Queries without an oracle fail as NO-ORACLE. Each non-streaming query's
+executed (AQE-final) plan is also checked against the rules in
+tools/audit_plans.py; a broken rule fails the query as PLAN-VIOLATION.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
-Golden-manifest mode (round-exit drift tripwire over ALL 424 queries,
+Golden-manifest mode (round-exit drift tripwire over ALL registered queries,
 including the ones the driver has never sampled):
 
     # record (rows, schema signature, value hash) per query at this SF:
@@ -37,21 +39,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools import plan_fingerprint  # noqa: E402
-
-_args = sys.argv[1:]
-MANIFEST_WRITE = MANIFEST_CHECK = None
-if "--manifest-write" in _args:
-    i = _args.index("--manifest-write")
-    MANIFEST_WRITE = _args[i + 1]
-    del _args[i : i + 2]
-if "--manifest-check" in _args:
-    i = _args.index("--manifest-check")
-    MANIFEST_CHECK = _args[i + 1]
-    del _args[i : i + 2]
-
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.01"
-ONLY = set(_args[1:])
+from tools import audit_plans, plan_fingerprint  # noqa: E402
 
 
 def sf_label(sf_dir: str) -> str:
@@ -82,6 +70,16 @@ def fingerprint(pdf: pd.DataFrame) -> dict:
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
+
+
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -155,51 +153,68 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> str:
 
 
 def main() -> None:
+    args = sys.argv[1:]
+    manifest_write = manifest_check = None
+    if "--manifest-write" in args:
+        i = args.index("--manifest-write")
+        manifest_write = args[i + 1]
+        del args[i : i + 2]
+    if "--manifest-check" in args:
+        i = args.index("--manifest-check")
+        manifest_check = args[i + 1]
+        del args[i : i + 2]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    only = set(args[1:])
+
+    from pipeline_query_engine_demo_spark import plans
     from pipeline_query_engine_demo_spark.session import get_spark
 
     import __spark_entry__ as e
 
-    spark = get_spark("correctness-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    # Plan strings truncate metadata fields at 100 chars by default,
+    # which cuts PushedFilters lists mid-token and would make the
+    # audit's pushed-filter patterns unmatchable. It only changes how
+    # plans print.
+    spark = get_spark(
+        "correctness-check", **{"spark.sql.maxMetadataStringLength": "1000"}
+    )
+    con = duckdb_views(sf_dir)
 
     qs, oracles = e.queries(), e.oracle_sql()
-    label = sf_label(SF_DIR)
+    label = sf_label(sf_dir)
     manifest = {}
-    if MANIFEST_CHECK:
-        manifest = json.load(open(MANIFEST_CHECK))
+    if manifest_check:
+        manifest = json.load(open(manifest_check))
     golden = manifest.get(label, {})
     new_entries: dict[str, dict] = {}
     n_ok = n_fail = 0
     failures = []
     for name, build in qs.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = build(spark, SF_DIR)
+            sdf = build(spark, sf_dir)
             spark_pdf = sdf.toPandas()
-            if MANIFEST_WRITE or MANIFEST_CHECK:
+            # The executed plan, read after the action so AQE has
+            # settled it (runtime SMJ->BHJ conversions included): the
+            # manifest fingerprints it and the plan rules check it.
+            plan = sdf._jdf.queryExecution().executedPlan().toString()
+            if manifest_write or manifest_check:
                 try:
                     fp = fingerprint(spark_pdf)
                 except TypeError as ex:
                     fp = {"rows": int(len(spark_pdf)), "schema": [], "hash": f"CANON-CRASH:{ex}"}
-                # Strategy-set fingerprint of the executed (AQE-final)
-                # plan: a broadcast silently demoting to SortMergeJoin
-                # or an Arrow path regressing to row Python is caught
-                # here even when the RESULT hash is unchanged.
-                try:
-                    fp["plan"] = plan_fingerprint.of_df(sdf)
-                except Exception:
-                    fp["plan"] = None
+                # Strategy-set fingerprint: a broadcast silently demoting
+                # to SortMergeJoin or an Arrow path regressing to row
+                # Python is caught here even when the RESULT hash is
+                # unchanged.
+                fp["plan"] = plan_fingerprint.extract(plan)
                 new_entries[name] = fp
             if name in oracles:
                 duck_pdf = con.sql(oracles[name]).df()
                 verdict = compare(name, spark_pdf, duck_pdf)
-                if verdict == "OK" and MANIFEST_CHECK and name in golden:
+                if verdict == "OK" and manifest_check and name in golden:
                     g, mine = golden[name], new_entries[name]
                     if any(
                         g.get(k) != mine.get(k) for k in ("rows", "schema", "hash")
@@ -248,6 +263,13 @@ def main() -> None:
                 # (no rows-only fallback exists in practice) — so a
                 # registered query without an oracle is a FAIL here.
                 verdict = f"NO-ORACLE n={len(spark_pdf)} (driver records err:no_oracle)"
+            # A streaming builder runs its stream inside the builder and
+            # returns the sink read-back, whose plan is not the streaming
+            # computation: the plan rules skip it by registry category.
+            if verdict == "OK" and plans.REGISTRY[name].category != "streaming":
+                broken = audit_plans.violations(name, plan)
+                if broken:
+                    verdict = "PLAN-VIOLATION " + "; ".join(broken)
         except Exception as ex:
             verdict = f"ERROR {type(ex).__name__}: {str(ex).splitlines()[0][:200]}"
             traceback.print_exc(limit=3)
@@ -259,14 +281,14 @@ def main() -> None:
             failures.append(name)
         print(f"{'PASS' if ok else 'FAIL':4} {name:40} {dt:6.2f}s  {verdict}")
     print(f"\n{n_ok} ok, {n_fail} fail" + (f": {failures}" if failures else ""))
-    if MANIFEST_CHECK:
-        missing = sorted(set(golden) - set(new_entries)) if not ONLY else []
+    if manifest_check:
+        missing = sorted(set(golden) - set(new_entries)) if not only else []
         unrecorded = sorted(set(new_entries) - set(golden))
         if missing:
             print(f"manifest entries not re-run: {missing}")
         if unrecorded:
             print(f"queries not in manifest[{label}]: {unrecorded}")
-    if MANIFEST_WRITE and MANIFEST_CHECK and n_fail:
+    if manifest_write and manifest_check and n_fail:
         # r11 advisor: when --manifest-check and --manifest-write name the
         # same file, a detected DRIFT must NOT immediately overwrite the
         # committed baseline (the drift would be recoverable only from
@@ -275,16 +297,16 @@ def main() -> None:
         # clean check earns a rewrite.
         print(
             f"manifest write SKIPPED ({n_fail} failures with --manifest-check "
-            f"active; baseline {MANIFEST_WRITE} left untouched)"
+            f"active; baseline {manifest_write} left untouched)"
         )
-    elif MANIFEST_WRITE:
+    elif manifest_write:
         existing = {}
-        if os.path.exists(MANIFEST_WRITE):
-            existing = json.load(open(MANIFEST_WRITE))
+        if os.path.exists(manifest_write):
+            existing = json.load(open(manifest_write))
         existing.setdefault(label, {}).update(new_entries)
         existing[label] = dict(sorted(existing[label].items()))
-        json.dump(dict(sorted(existing.items())), open(MANIFEST_WRITE, "w"), indent=1)
-        print(f"manifest[{label}]: wrote {len(new_entries)} entries -> {MANIFEST_WRITE}")
+        json.dump(dict(sorted(existing.items())), open(manifest_write, "w"), indent=1)
+        print(f"manifest[{label}]: wrote {len(new_entries)} entries -> {manifest_write}")
     sys.exit(1 if n_fail else 0)
 
 

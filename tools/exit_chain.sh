@@ -1,7 +1,7 @@
 #!/bin/bash
 # Round-exit verification chain — STRICTLY SERIALIZED (run nothing else,
 # not even "quick" test re-runs, while this is active: a concurrent
-# Spark session both skews step-8 timings and can flip AQE stage-reuse
+# Spark session both skews step-7 timings and can flip AQE stage-reuse
 # decisions, which round 11 proved shows up in plan-fingerprint diffs).
 #
 # Usage: nohup bash tools/exit_chain.sh > /tmp/exit_chain.log 2>&1 &
@@ -23,7 +23,7 @@ log() { echo "=== $(date -u +%H:%M:%S) $1"; }
 # BEFORE bench.py overwrites the tree copy. Guard: a hot-tier record
 # must never be the baseline.
 # (r11 advisor: the guard must be FATAL — without the || the heredoc's
-# nonzero exit was ignored and step 9 silently compared against an
+# nonzero exit was ignored and step 8 silently compared against an
 # invalid baseline.)
 # It lives under the chain's own TMPDIR, so concurrent chains never
 # overwrite each other's baseline.
@@ -43,35 +43,32 @@ PY
 log "STEP 1: pytest"
 python -m pytest tests/ -q 2>&1 | grep -E "^FAILED|^ERROR|passed|failed" | tail -5
 
-log "STEP 2: full sweep sf0.01 (+manifest check/write)"
+log "STEP 2: full sweep sf0.01 (+plan rules, manifest check/write)"
 python tools/check_correctness.py /root/testdata/sf0.01 \
   --manifest-check MANIFEST.json --manifest-write MANIFEST.json 2>&1 \
   | grep -E "^FAIL|ok, |DRIFT|missing|not in manifest|wrote"
 
-log "STEP 3: full sweep sf0.1 (+manifest check/write)"
+log "STEP 3: full sweep sf0.1 (+plan rules, manifest check/write)"
 python tools/check_correctness.py /root/testdata/sf0.1 \
   --manifest-check MANIFEST.json --manifest-write MANIFEST.json 2>&1 \
   | grep -E "^FAIL|ok, |DRIFT|missing|not in manifest|wrote"
 
-log "STEP 4: plan audit (regenerates PLANS.md)"
-python tools/audit_plans.py 2>&1 | tail -2
-
-log "STEP 5: oracle-mirror audit"
+log "STEP 4: oracle-mirror audit"
 python tools/audit_oracles.py 2>&1 | tail -3
 
-log "STEP 6: decimal-cast audit"
+log "STEP 5: decimal-cast audit"
 python tools/audit_decimal_casts.py 2>&1 | tail -2
 
-log "STEP 7: row-loop audit"
+log "STEP 6: row-loop audit"
 python tools/audit_row_loops.py 2>&1 | tail -2
 
-log "STEP 8: full-tier bench (box must be otherwise idle)"
+log "STEP 7: full-tier bench (box must be otherwise idle)"
 python bench.py 2>&1 | tail -2
 
-log "STEP 9: tripwire vs prior sidecar"
+log "STEP 8: tripwire vs prior sidecar"
 python tools/bench_compare.py BENCH_DETAIL.json "$prior" 2>&1 | tail -8
 
-log "STEP 10: vanilla driver-contract smoke"
+log "STEP 9: vanilla driver-contract smoke"
 python - <<'PY'
 import os
 from pyspark.sql import SparkSession
@@ -81,7 +78,7 @@ print('entry rows:', e.entry(spark).count(), '| queries:', len(e.queries()), '| 
 spark.stop()
 PY
 
-log "STEP 11: scratch leak check"
+log "STEP 10: scratch leak check"
 leaked="$(find "$TMPDIR" -maxdepth 1 -name 'spark_graft_*')"
 if [ -n "$leaked" ]; then
   echo "FAIL: scratch roots left behind in $TMPDIR:"; echo "$leaked"; exit 1

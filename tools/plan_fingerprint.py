@@ -2,15 +2,16 @@
 
 One place that reduces an executed-plan string to the strategy set the
 audits care about — exchange count, join strategies, Python-eval
-operators, partition-less windows — so that:
+operators, partition-less windows. tools/check_correctness.py reads
+each query's executed (AQE-final) plan once, after its action, and
 
-- tools/audit_plans.py derives its invariant checks and PLANS.md rows
-  from it, and
-- tools/check_correctness.py records it per query in MANIFEST.json and
-  diffs it in --manifest-check: a plan regression (a broadcast that
-  silently demoted to SortMergeJoin, an extra shuffle, an Arrow path
-  that fell back to row-at-a-time Python) becomes attributable to a
-  commit even when the RESULT hash is unchanged.
+- records this fingerprint per query in MANIFEST.json and diffs it in
+  --manifest-check: a plan regression (a broadcast that silently
+  demoted to SortMergeJoin, an extra shuffle, an Arrow path that fell
+  back to row-at-a-time Python) becomes attributable to a commit even
+  when the RESULT hash is unchanged, and
+- checks the same plan string against tools/audit_plans.py's rules,
+  which use the join, row-Python and bare-window detectors below.
 
 The fingerprint is deliberately coarse (counts and operator names, no
 expression text, no plan ids): it must be stable across runs of the
@@ -91,9 +92,9 @@ def count_bare_windows(plan: str) -> int:
 
 
 def has_row_python_udf(plan: str) -> bool:
-    """Row-at-a-time Python eval detector — EXACTLY audit_plans' historic
-    semantics (BatchEvalPythonUDTF substring-matches deliberately; the
-    one table-argument UDTF is whitelisted there with a comment)."""
+    """Row-at-a-time Python eval detector (BatchEvalPythonUDTF
+    substring-matches deliberately; the one table-argument UDTF is
+    whitelisted in audit_plans.PYUDF_WHITELIST with a comment)."""
     return ("BatchEvalPython" in plan) or (
         "PythonUDF" in plan
         and not any(
@@ -121,9 +122,3 @@ def extract(plan: str) -> dict:
         "bare_windows": count_bare_windows(plan),
     }
 
-
-def of_df(df) -> dict:
-    """Fingerprint a DataFrame's executed plan. Call AFTER an action so
-    AQE has finalized the plan (the strategy set then reflects what
-    actually ran, including runtime SMJ->BHJ conversions)."""
-    return extract(df._jdf.queryExecution().executedPlan().toString())

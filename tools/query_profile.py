@@ -18,11 +18,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-
 
 def main() -> None:
+    names = sys.argv[1].split(",")
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+
     import bench
     from pipeline_query_engine_demo_spark import plans
     from pipeline_query_engine_demo_spark.session import get_spark
@@ -30,12 +31,11 @@ def main() -> None:
     spark = get_spark("query-profile", **bench.RETENTION)
     spark.sparkContext.setLogLevel("ERROR")
     qs = plans.queries()
-    names = sys.argv[1].split(",")
-    for _ in range(REPS):
+    for _ in range(reps):
         for name in names:
-            bench.noop_write(qs[name](spark, SF_DIR))
+            bench.noop_write(qs[name](spark, sf_dir))
             bench.drop_run_blocks(spark)
-    _, layers, errors = bench.traced_pass(spark, SF_DIR, names, qs)
+    _, layers, errors = bench.traced_pass(spark, sf_dir, names, qs)
     print(json.dumps(layers))
     if errors:
         print(json.dumps({"errors": errors}), file=sys.stderr)
