@@ -15,6 +15,21 @@ for the 100 TB design point:
   cores, like the reference sizes its pipelines to the machine's
   threads, so a 4-core box and local[32] run the same code path with
   one task per core and a cluster sets the count by shuffled bytes.
+
+A driver JVM that :func:`get_spark` launches maps a class-data archive
+of Spark's jars (``class_archive``), which cuts JVM launch plus first
+job from about 7 s to about 3.5 s on a 4-core box (SCALE.md). The
+archive holds class metadata of the installed jars only, no data, plan
+or result, and lives at
+``${XDG_CACHE_HOME:-~/.cache}/spark_graft/spark-<key>.jsa``, keyed by
+the JDK, pyspark and jar set. The first launch on an install builds it
+(about 40 s, once). A launch goes without it, as a plain launch, when
+the master is not local, the Spark conf dir holds any file other than a
+``*.template``, ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or
+``SPARK_DIST_CLASSPATH`` is set, the caller overrides
+``spark.driver.extraJavaOptions``, the cache dir is not writable, an
+earlier build failed (``spark-<key>.failed``) or another process is
+building it. Delete the file (or the marker) to reset.
 """
 
 from __future__ import annotations
@@ -28,7 +43,10 @@ import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from . import class_archive
 
 # --- vendored pure-python protobuf (vendor/google/protobuf) -------------
 # transformWithStateInPandas speaks protobuf to the JVM state server; when
@@ -249,6 +267,12 @@ def replica_path(sf_dir: str, name: str) -> tuple[str, bool]:
     return path, os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _launches_jvm() -> bool:
+    """Whether the next ``getOrCreate`` starts a driver JVM: none was
+    started in this process and none was handed to it (spark-submit)."""
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
 def get_spark(app_name: str = "pipeline-query-engine-spark", **overrides: str) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -282,8 +306,14 @@ def get_spark(app_name: str = "pipeline-query-engine-spark", **overrides: str) -
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={scratch_path()}",
         **overrides,
     }
+    archive = None
+    if "spark.driver.extraJavaOptions" not in overrides and _launches_jvm():
+        archive = class_archive.archive_for_launch(conf.get("spark.master", f"local[{cpus}]"))
+    if archive:
+        conf["spark.driver.extraJavaOptions"] += f" -XX:SharedArchiveFile={archive}"
     for key, value in conf.items():
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    with class_archive.launch_env(archive):
+        spark = builder.getOrCreate()
     ensure_package_on_workers(spark)
     return spark

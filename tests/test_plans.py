@@ -289,12 +289,17 @@ def test_hilbert_layout_prunes_2d_boxes(spark, tmp_path):
         "xsort": str(tmp_path / "xsort"),
         "scattered": str(tmp_path / "scattered"),
     }
-    curved.repartitionByRange(16, "d").sortWithinPartitions("d").drop(
-        "d"
-    ).write.parquet(layouts["hilbert"])
-    base.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(
-        layouts["xsort"]
-    )
+    # Range bounds come from a sample seeded by the RDD id, which every
+    # earlier job in the shared session shifts: decoded rows varied from
+    # 20k to 80k (Hilbert) and 125k to 160k (x-sort) with the same data.
+    # A sample as large as the input makes the bounds exact.
+    with held_confs(spark, {"spark.sql.execution.rangeExchange.sampleSizePerPartition": "1000000"}):
+        curved.repartitionByRange(16, "d").sortWithinPartitions("d").drop(
+            "d"
+        ).write.parquet(layouts["hilbert"])
+        base.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(
+            layouts["xsort"]
+        )
     base.repartition(16).sortWithinPartitions("payload").write.parquet(
         layouts["scattered"]
     )

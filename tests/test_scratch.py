@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import ast
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
@@ -67,6 +68,34 @@ def test_one_scratch_root_per_process_removed_at_exit(tmp_path, sf_dir):
             child.wait(timeout=60)
     assert child.returncode == 0, err[-3000:]
     assert _scratch_roots(tmp_path) == []
+
+
+def test_class_archive_build_leaves_no_scratch(tmp_path):
+    """A session that first builds its class-data archive (in a child
+    process with a JVM of its own) leaves the archive and nothing else:
+    no scratch root of either process and no half-written archive."""
+    tmp, cache = tmp_path / "tmp", tmp_path / "cache"
+    tmp.mkdir()
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {_REPO!r})
+        from pipeline_query_engine_demo_spark.session import get_spark
+        get_spark("scratch-test").range(10).count()
+        """
+    )
+    env = {**os.environ, "TMPDIR": str(tmp), "XDG_CACHE_HOME": str(cache),
+           "SPARK_GRAFT_CPUS": "2"}
+    child = subprocess.run([sys.executable, "-c", script], env=env, capture_output=True,
+                           text=True, timeout=900)
+    assert child.returncode == 0, child.stderr[-3000:]
+    archives = sorted(os.listdir(cache / "spark_graft"))
+    try:
+        assert [f for f in archives if f.endswith(".jsa")], archives
+        assert [f for f in archives if ".tmp" in f or f.endswith(".failed")] == []
+        assert _scratch_roots(tmp) == []
+    finally:
+        shutil.rmtree(cache, ignore_errors=True)  # about 180 MB
 
 
 def test_only_session_names_the_scratch_root():

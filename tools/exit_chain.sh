@@ -40,6 +40,18 @@ assert d.get('tier') == 'full', f"baseline tier={d.get('tier')} — find a full-
 assert d.get('scheduler', 'FIFO') == 'FIFO', f"baseline scheduler={d.get('scheduler')}"
 PY
 
+log "STEP 0: driver class-data archive"
+# The first get_spark on an install builds the archive (about 40 s, once);
+# do it here so neither the first test nor step 7's bench pays for it.
+python - <<'PY'
+from pipeline_query_engine_demo_spark.session import get_spark
+spark = get_spark("exit-chain")
+args = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+flags = [a.split("=", 1)[1] for a in args if a.startswith("-XX:SharedArchiveFile=")]
+print("class archive:", flags[0] if flags else "none (plain launch)")
+spark.stop()
+PY
+
 log "STEP 1: pytest"
 python -m pytest tests/ -q 2>&1 | grep -E "^FAILED|^ERROR|passed|failed" | tail -5
 
